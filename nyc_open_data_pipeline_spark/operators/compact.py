@@ -9,8 +9,8 @@ plain parquet directories.
 
 Scale design: file sizes come from the filesystem listing (no data scan);
 the rewrite itself is one job whose output-file count is
-ceil(bytes / target) per partition, applied atomically via the same
-write-then-swap used by `pipeline/storage.py`. Partitions already at target
+ceil(bytes / target) per partition, applied by a write-then-swap of each
+rewritten directory (two renames). Partitions already at target
 density are SKIPPED — a steady-state nightly compaction touches only the
 partitions the day's ingest fragmented.
 """

@@ -6,7 +6,7 @@ as one lazy Spark pipeline per dataset.
 3 transform via the dataset's plugin (parser.load_transformer)
 4 validate (ranges/uniqueness warn; missing columns raise)
 5 store: upsert when unique_keys configured, else append (:136-150)
-6 metadata upsert (K4)
+6 metadata upsert (K4); each commit's superseded segments are vacuumed
 Dry-run short-circuits after validation with a preview (ingest_data.py:108-116).
 """
 
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from nyc_open_data_pipeline_spark.config import DatasetConfig
 from nyc_open_data_pipeline_spark.pipeline import parser as P
+from nyc_open_data_pipeline_spark.pipeline.schema import TableSchema
 from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
 
 log = logging.getLogger(__name__)
@@ -127,14 +128,30 @@ def ingest_dataset(
         out.summary().show()
         return IngestResult(key, report.record_count, None, "dry_run", report)
 
-    schema = transformer.get_schema()
+    stored = store(spark, storage, key, out, transformer.get_schema())
+    return IngestResult(key, report.record_count, stored, "success", report)
+
+
+def store(
+    spark: SparkSession,
+    storage: ParquetStorage,
+    key: str,
+    out: DataFrame,
+    schema: TableSchema,
+) -> int:
+    """Lifecycle steps 5-6, shared by batch and stream ingest: upsert
+    (unique keys) or append, then the metadata upsert. Each commit is
+    followed by a ``vacuum`` of the table it wrote, so superseded segments
+    never pile up on disk. Returns the stored row count."""
     if schema.unique_keys:
         stored = storage.upsert(spark, out, schema)
     else:
         storage.create_or_append(out, schema)
         stored = storage._count(spark, schema.table_name)
+    storage.vacuum(schema.table_name)
     storage.update_metadata(spark, key, schema.table_name, stored)
-    return IngestResult(key, report.record_count, stored, "success", report)
+    storage.vacuum(storage.META_TABLE)
+    return stored
 
 
 def stream_ingest(
@@ -174,13 +191,7 @@ def stream_ingest(
             return
         sess = batch_df.sparkSession
         out, report = P.parse(batch_df, transformer)
-        schema = transformer.get_schema()
-        if schema.unique_keys:
-            stored = storage.upsert(sess, out, schema)
-        else:
-            storage.create_or_append(out, schema)
-            stored = storage._count(sess, schema.table_name)
-        storage.update_metadata(sess, key, schema.table_name, stored)
+        stored = store(sess, storage, key, out, transformer.get_schema())
         log.info("%s batch %d: %d records, table at %d rows",
                  key, batch_id, report.record_count, stored)
 

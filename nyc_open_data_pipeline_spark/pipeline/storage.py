@@ -6,9 +6,10 @@ storage.py) on partitioned parquet:
 - K1 DDL-from-schema (:73-183)  -> TableSchema-driven writes, indexes become
   partition columns (partition pruning replaces index scans, SURVEY §4)
 - K2 append insert  (:185-228)  -> mode('append')
-- K3 upsert/MERGE   (:230-297)  -> partition-pruned anti-join + staged
-  partition-dir swap (``INSERT ... ON CONFLICT DO UPDATE`` semantics:
-  incoming rows win); full atomic-swap rewrite only for unpartitioned tables
+- K3 upsert/MERGE   (:230-297)  -> partition-pruned anti-join; the merged
+  slice replaces exactly the touched partitions (``INSERT ... ON CONFLICT
+  DO UPDATE`` semantics: incoming rows win); full rewrite only for
+  unpartitioned tables
 - K4 metadata upsert (:51-71,299-334) -> tiny _dataset_metadata table
 - K5 parquet export  (:336-382) -> snappy parquet (native)
 
@@ -16,40 +17,24 @@ At 100 TB the upsert rewrite is bounded by partition pruning: only
 partitions containing incoming keys are read and rewritten (pass
 ``partition_by`` so the anti-join's scan prunes).
 
-Two commit modes (round 13), selected by ``commit=``:
-
-- ``"swap"`` (default, POSIX/HDFS): EVERY write path stages to an
-  invisible sibling dir first and publishes by fenced renames after the
-  Spark job finishes — full rewrites and first writes in ONE directory
-  rename, appends in one rename per staged part file, partition
-  overwrites in two renames per touched partition dir (old slice parked
-  in an __old_ trash dir until the loop completes). The stale-lock
-  takeover window is therefore the fence-to-rename span (metadata ops,
-  milliseconds) on every path, never the write job itself (ADVICE r12
-  closed structurally). Honest residue: the multi-rename publishes
-  (append, partition overwrite) are not one atomic op — a crash inside
-  the loop leaves a partial append / a partition whose old slice sits in
-  the trash dir — the same exposure class as a parquet committer's
-  task-file moves, which the previous job-commit-publishes design had
-  inside a much longer window.
-- ``"pointer"`` (object-store-portable): every write lands in a fresh,
-  content-addressed SEGMENT directory that is invisible until the single
-  ``_current`` manifest file is atomically replaced (tmp + ``os.replace``
-  locally; on S3 the same flip is one conditional PUT / put-if-match).
-  No directory is ever renamed and no published file is ever mutated, so
-  the protocol is safe on stores where directory rename is copy+delete.
-  EVERY write path (append included) publishes via the manifest flip, so
-  the zombie window is one pointer swap wide for all of them. The
-  manifest maps each Hive partition relpath to the ordered list of
-  segments contributing rows to it; appends add a segment to the list,
-  partition overwrites replace the list, full rewrites replace the whole
-  map. Superseded segments are swept by ``vacuum`` (under the table
-  lock). Reads resolve through the manifest — use ``read()``, not a bare
-  ``spark.read.parquet`` on the table root. Readers get SNAPSHOT
-  ISOLATION for free: a DataFrame resolved before a flip keeps scanning
-  the immutable segments it resolved, unaffected by later commits, until
-  ``vacuum`` reclaims them — in swap mode the old directory is removed
-  inside the swap, so a long-running reader's scan breaks mid-job.
+One commit protocol, portable to object stores: every write lands in a
+fresh SEGMENT directory that is invisible until the single ``_current``
+manifest file is atomically replaced (tmp + ``os.replace`` locally; on S3
+the same flip is one conditional PUT / put-if-match). No directory is ever
+renamed and no published file is ever mutated, so the protocol is safe on
+stores where directory rename is copy+delete, and the stale-lock takeover
+window is one pointer swap wide on every write path. The manifest maps
+each Hive partition relpath to the ordered list of segments contributing
+rows to it — appends add a segment to the list, partition overwrites
+replace the list, full rewrites replace the whole map — and carries the
+table SCHEMA each commit stamps, which ``read()`` applies to every segment
+(no footer inference; evolved columns read as NULL in older segments).
+Superseded segments are swept by ``vacuum`` (under the table lock; the
+ingest store step runs it after every commit). Reads resolve through the
+manifest — use ``read()``, not a bare ``spark.read.parquet`` on the table
+root. Readers get SNAPSHOT ISOLATION for free: a DataFrame resolved before
+a flip keeps scanning the immutable segments it resolved, unaffected by
+later commits, until ``vacuum`` reclaims them.
 """
 
 from __future__ import annotations
@@ -100,18 +85,13 @@ class ParquetStorage:
     lock_timeout: float = 60.0
     lock_stale_after: float = 300.0
     lock_heartbeat: float | None = None  # default: min(stale/3, 30s)
-    commit: str = "swap"  # "swap" (POSIX rename) | "pointer" (manifest flip)
     _heartbeats: dict = field(default_factory=dict, repr=False, compare=False)
-
-    def __post_init__(self) -> None:
-        if self.commit not in ("swap", "pointer"):
-            raise ValueError(f"commit must be 'swap' or 'pointer', got {self.commit!r}")
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     # ------------------------------------------------------------------
-    # writer lock + lease heartbeat + generation marker
+    # writer lock + lease heartbeat
     # ------------------------------------------------------------------
 
     def _lock_dir(self, table: str) -> str:
@@ -250,10 +230,7 @@ class ParquetStorage:
     def _check_fence(self, table: str, token: str) -> None:
         """Commit-point fence: a writer that lost its lock to a stale-lock
         takeover must not publish. Called after the write job completes,
-        immediately before the publish step — one syscall for the
-        manifest flip / full-rewrite rename, a milliseconds rename loop
-        for swap-mode appends and partition overwrites (class
-        docstring)."""
+        immediately before the one-syscall manifest flip."""
         if not self._owns_lock(table, token):
             raise WriterFencedError(
                 f"lock on {table!r} was taken over mid-write; aborting commit"
@@ -272,179 +249,134 @@ class ParquetStorage:
         finally:
             self._release_lock(table, token)
 
-    GEN_FILE = "_generation"
     MANIFEST = "_current"
     HISTORY_PREFIX = "_gen_"
 
     def generation(self, table: str) -> int:
-        """Monotonic commit counter for a table (0 = never committed via
-        the protocol). Swap mode: stored as ``_generation`` inside the
-        table dir (underscore-prefixed, so parquet readers ignore it).
-        Pointer mode: carried by the manifest itself."""
-        if self.commit == "pointer":
-            m = self._read_manifest(table)
-            return int(m["gen"]) if m else 0
-        try:
-            with open(os.path.join(self.path(table), self.GEN_FILE)) as f:
-                return int(json.load(f)["gen"])
-        except (OSError, ValueError, KeyError):
-            return 0
+        """Monotonic commit counter for a table (0 = never committed),
+        carried by the manifest itself."""
+        m = self._read_manifest(table)
+        return int(m["gen"]) if m else 0
 
-    def _write_generation(
-        self, dirpath: str, gen: int, token: str, schema_json: str | None = None
-    ) -> None:
-        # tmp + atomic replace: an in-place truncate-write would let a crash
-        # or concurrent reader see a torn file, which generation() reads as
-        # 0 — breaking monotonicity (round-12 review)
-        dest = os.path.join(dirpath, self.GEN_FILE)
-        tmp = f"{dest}.tmp_{uuid.uuid4().hex[:8]}"
-        rec = {"gen": gen, "writer": token, "ts": time.time()}
-        if schema_json is not None:
-            rec["schema"] = schema_json
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, dest)
-
-    def _stamped_schema_json(self, table: str) -> str | None:
-        """The table schema stamped by the last swap-mode commit, if any
-        (older tables predate stamping and read via footer inference)."""
-        try:
-            with open(os.path.join(self.path(table), self.GEN_FILE)) as f:
-                return json.load(f).get("schema")
-        except (OSError, ValueError):
-            return None
-
-    def _evolved_schema_json(self, table: str, new_schema) -> str:
+    @staticmethod
+    def _evolved_schema(prev: dict | None, new_schema) -> dict:
         """Schema to stamp after a PARTIAL write (append / partition
-        replace): previous stamped fields, with the new write's fields
+        replace): the previous stamp's fields, with the new write's fields
         merged in by name — a re-declared field takes its NEW type
         (latest declaration wins, the K1 contract), unseen fields append.
-        Old files missing a later column read as NULL under the explicit
-        schema, matching pointer mode's unionByName semantics."""
+        Segments missing a later column read as NULL under the stamp."""
         from pyspark.sql.types import StructField, StructType
 
-        prev = self._stamped_schema_json(table)
         if not prev:
-            return new_schema.json()
-        merged = {f.name: f for f in StructType.fromJson(json.loads(prev)).fields}
+            return new_schema.jsonValue()
+        merged = {f.name: f for f in StructType.fromJson(prev).fields}
         for f in new_schema.fields:
             merged[f.name] = f
         return StructType(
             [StructField(n, f.dataType, True) for n, f in merged.items()]
-        ).json()
+        ).jsonValue()
 
     def exists(self, table: str) -> bool:
-        if self.commit == "pointer":
-            m = self._read_manifest(table)
-            return bool(m and m.get("parts"))
-        self._recover(table)
-        p = self.path(table)
-        return os.path.exists(p) and any(
-            not f.startswith(("_", ".")) for f in os.listdir(p)
-        )
-
-    def _recover(self, table: str) -> None:
-        """Crash recovery for the atomic swap: ``_atomic_write`` renames
-        final -> __old_x then tmp -> final. A crash inside that window
-        leaves no final dir but an intact __old_x — restore the newest one
-        so a restarted writer MERGES into the previous state instead of
-        silently starting a fresh table (the data-loss mode a streaming
-        foreachBatch replay would otherwise hit). Orphaned __old_x dirs
-        alongside a live final are leftover garbage from a crash after the
-        swap — ignored here, removed by the next successful swap's path.
-        Pointer mode needs no recovery: an unflipped manifest means the
-        previous manifest (and every segment it references) is still the
-        committed state, and the new segment is an orphan for vacuum."""
-        if self.commit == "pointer":
-            return
-        final = self.path(table)
-        if os.path.exists(final):
-            return
-        parent, base = os.path.dirname(final) or ".", os.path.basename(final)
-        if not os.path.exists(parent):
-            return
-        olds = [
-            os.path.join(parent, d)
-            for d in os.listdir(parent)
-            if d.startswith(f"{base}__old_")
-        ]
-        if olds:
-            try:
-                os.rename(max(olds, key=os.path.getmtime), final)
-            except OSError:
-                # lost a race with a concurrent writer completing its swap
-                # (this reader saw the one-syscall-wide no-final window);
-                # the writer's final state is the correct one — keep it.
-                pass
+        m = self._read_manifest(table)
+        return bool(m and m.get("parts"))
 
     # ------------------------------------------------------------------
-    # pointer-mode manifest: read / resolve / flip
+    # manifest: read / resolve / flip
     # ------------------------------------------------------------------
 
     def _manifest_path(self, table: str) -> str:
         return os.path.join(self.path(table), self.MANIFEST)
 
     def _read_manifest(self, table: str) -> dict | None:
-        """None ONLY when the manifest file does not exist. An existing
-        but unreadable/unparseable ``_current`` raises instead of reading
-        as absent: treating corruption as 'never committed' would let the
-        next create_or_append start a fresh gen-1 manifest that orphans
-        every committed segment — which the next vacuum would then DELETE
-        (round-13 review; the swap path's _recover refuses the same
-        silent-fresh-table mode)."""
+        """The committed manifest: ``_current`` names the generation, whose
+        immutable ``_gen_NNNNNNNN.json`` holds the partition map and the
+        stamped schema. None ONLY when ``_current`` does not exist. An
+        existing but unreadable pointer or manifest raises instead of
+        reading as absent: treating corruption as 'never committed' would
+        let the next create_or_append start a fresh gen-1 manifest that
+        orphans every committed segment — which the next vacuum would then
+        DELETE (round-13 review). A table dir holding the ``_generation``
+        marker of the retired rename-publish layout (bare parquet files,
+        no manifest) is refused the same way, so its rows are never
+        silently shadowed by a fresh manifest."""
         path = self._manifest_path(table)
+        if not os.path.exists(path):
+            if os.path.exists(os.path.join(self.path(table), "_generation")):
+                raise RuntimeError(
+                    f"table dir {self.path(table)!r} uses the retired "
+                    "rename-publish layout (no manifest); re-ingest it into "
+                    "a fresh storage root"
+                )
+            return None
         try:
             with open(path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-        except (OSError, ValueError) as e:
+                m = json.load(f)
+            if "parts" not in m:  # the pointer: resolve its generation
+                with open(self._history_path(table, int(m["gen"]))) as f:
+                    m = json.load(f)
+        except (OSError, ValueError, KeyError) as e:
             raise RuntimeError(
-                f"pointer-mode manifest {path!r} exists but is unreadable "
+                f"manifest {path!r} exists but is unreadable "
                 f"({e}); refusing to treat the table as uncommitted — "
                 "restore the manifest (or remove it together with the "
                 "segment dirs to truly reset the table)"
             ) from e
+        return m
 
     def _history_path(self, table: str, gen: int) -> str:
         return os.path.join(self.path(table), f"{self.HISTORY_PREFIX}{gen:08d}.json")
 
-    def _flip_manifest(self, table: str, manifest: dict, token: str) -> None:
-        """Publish: atomically replace the single ``_current`` pointer
-        file. Locally tmp + os.replace; on S3 the identical flip is one
-        conditional PUT (put-if-match on the previous ETag) — the only
-        operation in the whole pointer protocol that needs atomicity.
+    def _retained_manifest(self, table: str, gen: int) -> dict:
+        try:
+            with open(self._history_path(table, gen)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise ValueError(
+                f"generation {gen} of {table!r} is not retained "
+                "(vacuumed, or never existed) — see history()"
+            ) from None
 
-        TIME TRAVEL: before the flip, the same manifest is persisted as an
-        immutable ``_gen_NNNNNNNN.json`` history file. Segments are
-        immutable until vacuum, so any retained generation resolves to a
-        consistent snapshot (``read(as_of=...)``); a crash between the
-        history write and the flip leaves an orphan history file above the
-        current generation, which readers refuse (never-committed state)
-        and vacuum removes."""
+    def _flip_manifest(self, table: str, manifest: dict, token: str) -> None:
+        """Publish. The manifest is first persisted as the immutable
+        ``_gen_NNNNNNNN.json`` of its generation, then the single
+        ``_current`` pointer file (naming that generation) is atomically
+        replaced. Locally tmp + os.replace; on S3 the identical flip is one
+        conditional PUT (put-if-match on the previous ETag) — the only
+        operation in the whole protocol that needs atomicity.
+
+        TIME TRAVEL: segments are immutable until vacuum, so any retained
+        generation file resolves to a consistent snapshot
+        (``read(as_of=...)``); a crash between the generation write and the
+        flip leaves an orphan generation file above the current one, which
+        readers refuse (never-committed state) and vacuum removes. The
+        fence is checked before EACH replace: a writer that lost its lock
+        must not overwrite the generation file a takeover winner committed
+        under the same number, since ``_current`` resolves through it."""
         os.makedirs(self.path(table), exist_ok=True)
-        hist = self._history_path(table, int(manifest["gen"]))
-        htmp = f"{hist}.tmp_{uuid.uuid4().hex[:8]}"
-        with open(htmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(htmp, hist)
-        dest = self._manifest_path(table)
-        tmp = f"{dest}.tmp_{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        self._check_fence(table, token)
-        os.replace(tmp, dest)
+        gen = int(manifest["gen"])
+        for dest, rec in (
+            (self._history_path(table, gen), manifest),
+            (self._manifest_path(table), {"gen": gen}),
+        ):
+            tmp = f"{dest}.tmp_{uuid.uuid4().hex[:8]}"
+            with open(tmp, "w") as f:
+                json.dump(rec, f, separators=(",", ":"))
+            self._check_fence(table, token)
+            os.replace(tmp, dest)
+
+    def _commit(self, table: str, manifest: dict, token: str, **fields) -> None:
+        """Stamp the next generation (plus ``fields``, e.g. the table
+        ``schema``) onto ``manifest`` and flip it."""
+        manifest.update(fields, gen=int(manifest["gen"]) + 1)
+        self._flip_manifest(table, manifest, token)
 
     def history(self, table: str) -> list[int]:
-        """Retained generations of a pointer-mode table, oldest first —
-        each readable via ``read(as_of=gen)`` until ``vacuum`` prunes it
-        past its retention. Orphans above the current generation (crash
-        between history write and flip) are excluded."""
-        if self.commit != "pointer":
-            raise ValueError("history() requires commit='pointer'")
+        """Retained generations of a table, oldest first — each readable
+        via ``read(as_of=gen)`` until ``vacuum`` prunes it past its
+        retention. Orphans above the current generation (crash between
+        history write and flip) are excluded."""
         root = self.path(table)
-        m = self._read_manifest(table)
-        cur = int(m["gen"]) if m else 0
+        cur = self.generation(table)
         out = []
         if os.path.isdir(root):
             for e in os.listdir(root):
@@ -456,39 +388,23 @@ class ParquetStorage:
         return sorted(out)
 
     def rollback(self, table: str, to_gen: int) -> int:
-        """Restore a pointer-mode table to a retained earlier generation —
-        published as a NEW generation whose manifest reuses the old one's
+        """Restore a table to a retained earlier generation — published
+        as a NEW generation whose manifest reuses the old one's
         partition->segment map (no data is copied or rewritten; the old
         segments are still on disk because vacuum retention kept their
         manifest). Returns the new generation number."""
-        if self.commit != "pointer":
-            raise ValueError("rollback() requires commit='pointer'")
         with self._locked(table) as token:
             cur = self._read_manifest(table)
             if not cur:
-                raise FileNotFoundError(f"pointer-mode table {table!r} has no manifest")
+                raise FileNotFoundError(f"table {table!r} has no manifest")
             if to_gen >= int(cur["gen"]):
                 raise ValueError(
                     f"rollback target gen {to_gen} is not below current {cur['gen']}"
                 )
-            try:
-                with open(self._history_path(table, to_gen)) as f:
-                    old = json.load(f)
-            except FileNotFoundError:
-                raise ValueError(
-                    f"generation {to_gen} of {table!r} is not retained "
-                    "(vacuumed, or never existed) — see history()"
-                ) from None
-            new_gen = int(cur["gen"]) + 1
-            m = {
-                "gen": new_gen,
-                "parts": old["parts"],
-                "writer": token,
-                "schema": old.get("schema"),
-                "restored_from": to_gen,
-            }
-            self._flip_manifest(table, m, token)
-            return new_gen
+            old = self._retained_manifest(table, to_gen)
+            m = {"gen": cur["gen"], "parts": old["parts"], "restored_from": to_gen}
+            self._commit(table, m, token, schema=old.get("schema"))
+            return int(m["gen"])
 
     def _write_segment(
         self, df: DataFrame, schema: TableSchema
@@ -534,39 +450,21 @@ class ParquetStorage:
     def read(
         self, spark: SparkSession, table: str, as_of: int | None = None
     ) -> DataFrame:
-        """Resolve the table to a DataFrame. Swap mode: the table dir is
-        the data, read under the schema the last commit STAMPED in the
-        generation marker — deterministic under schema evolution (with
-        footer inference, which file's schema wins depends on listing
-        order of UUID-named part files), old files' missing columns read
-        as NULL, empty tables read as typed empty frames, and no
-        all-footer mergeSchema pass is ever needed at scale. Tables
-        stamped before schema stamping fall back to footer inference.
-        Pointer mode: union the manifest's live (segment, partition)
-        slices — per-segment ``basePath`` keeps the Hive partition
-        columns, and unionByName(allowMissingColumns) lets old segments
-        predate a schema-evolution column (they read as NULL, same as
-        the swap path). ``as_of=<generation>`` (pointer only) TIME-TRAVELS
-        to a retained generation's snapshot — valid until vacuum retention
-        prunes it; generations above the current one are refused (a crash
-        orphan is never-committed state)."""
-        if self.commit != "pointer":
-            if as_of is not None:
-                raise ValueError("as_of time travel requires commit='pointer'")
-            self._recover(table)
-            sj = self._stamped_schema_json(table)
-            if sj:
-                from pyspark.sql.types import StructType
+        """Resolve the table to a DataFrame: one scan of the manifest's
+        live (segment, partition) slices under the schema the last commit
+        STAMPED in the manifest — deterministic under schema evolution
+        (with footer inference, which file's schema wins depends on
+        listing order of UUID-named part files), old segments' missing
+        columns read as NULL, empty tables read as typed empty frames, and
+        no footer-inference job runs per read. ``as_of=<gen>``
+        TIME-TRAVELS to a retained generation's snapshot — valid until
+        vacuum retention prunes it; generations above the current one are
+        refused (a crash orphan is never-committed state)."""
+        from pyspark.sql.types import StructType
 
-                return spark.read.schema(
-                    StructType.fromJson(json.loads(sj))
-                ).parquet(self.path(table))
-            return spark.read.parquet(self.path(table))
         m = self._read_manifest(table)
         if not m:
-            raise FileNotFoundError(
-                f"pointer-mode table {table!r} has no committed manifest"
-            )
+            raise FileNotFoundError(f"table {table!r} has no committed manifest")
         if as_of is not None:
             if as_of > int(m["gen"]):
                 raise ValueError(
@@ -574,61 +472,49 @@ class ParquetStorage:
                     f"committed generation {m['gen']} of {table!r}"
                 )
             if as_of != int(m["gen"]):
-                try:
-                    with open(self._history_path(table, as_of)) as f:
-                        m = json.load(f)
-                except FileNotFoundError:
-                    raise ValueError(
-                        f"generation {as_of} of {table!r} is not retained "
-                        "(vacuumed, or never existed) — see history()"
-                    ) from None
+                m = self._retained_manifest(table, as_of)
+        stamped = StructType.fromJson(m["schema"])
         if not m.get("parts"):
             # legitimately committed but EMPTY (every partition deleted or
-            # purged): readers get a typed empty frame from the schema the
-            # last write stamped, instead of a crash after a successful
+            # purged): a typed empty frame, not a crash after a successful
             # commit (round-13 review)
-            sj = m.get("schema")
-            if sj:
-                from pyspark.sql.types import StructType
+            return spark.createDataFrame([], stamped)
+        return self._scan(spark, table, m["parts"], stamped)
 
-                return spark.createDataFrame([], StructType.fromJson(json.loads(sj)))
-            raise FileNotFoundError(
-                f"pointer-mode table {table!r} is empty and predates schema "
-                "stamping; no row source to type an empty frame from"
-            )
+    def _scan(self, spark: SparkSession, table: str, parts: dict, schema) -> DataFrame:
+        """ONE scan over the (segment, partition) slices in ``parts`` (a
+        manifest's partition -> segments map), read under ``schema``.
+        ``basePath`` is the table root, so Hive partition values parse
+        from each slice's own dir; ``ignoreInvalidPartitionPaths`` lets
+        the ``seg_*`` level between them differ per slice. A single scan,
+        not a union of per-segment scans, keeps the split count (and so
+        the file count of a rewrite that reads the table) independent of
+        how many segments the table spans."""
         root = self.path(table)
-        by_seg: dict[str, list[str]] = {}
-        for rp, segs in m["parts"].items():
-            for seg in segs:
-                by_seg.setdefault(seg, []).append(rp)
-        out: DataFrame | None = None
-        for seg in sorted(by_seg):
-            segroot = os.path.join(root, seg)
-            rps = by_seg[seg]
-            if rps == [""]:
-                part = spark.read.parquet(segroot)
-            else:
-                part = spark.read.option("basePath", segroot).parquet(
-                    *[os.path.join(segroot, rp) for rp in sorted(rps)]
-                )
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
-        assert out is not None
-        return out
+        paths = sorted(
+            os.path.join(root, seg, rp) if rp else os.path.join(root, seg)
+            for rp, segs in parts.items()
+            for seg in segs
+        )
+        return (
+            spark.read.schema(schema)
+            .option("basePath", root)
+            .option("ignoreInvalidPartitionPaths", "true")
+            .parquet(*paths)
+        )
 
     # ASCII characters that survive Spark's Hive-path escaping verbatim.
-    # The pointer protocol repoints partitions by their DIR NAME, so a
-    # value Spark would percent-escape (e.g. "a:b" -> "a%3Ab") would make
-    # the computed relpath miss the segment's actual dir — the merged
-    # partition would silently drop from the manifest while the stale
-    # pointer kept serving old rows. Refuse loudly instead of replicating
-    # the full escape table (round-13 self-review). This set is MEASURED,
-    # not assumed: one partition per printable ASCII char written through
-    # Spark, dir names diffed — escaped: "#%'*/:=?[\]^{ plus controls;
-    # everything else (including space) passes verbatim, and the escape
-    # table only covers code points < 128 ('café' is written verbatim),
-    # so non-ASCII passes too.
+    # The protocol repoints partitions by their DIR NAME, so a value Spark
+    # would percent-escape (e.g. "a:b" -> "a%3Ab") would make the computed
+    # relpath miss the segment's actual dir — the merged partition would
+    # silently drop from the manifest while the stale pointer kept serving
+    # old rows. Refuse loudly instead of replicating the full escape table
+    # (round-13 self-review). This set is MEASURED, not assumed: one
+    # partition per printable ASCII char written through Spark, dir names
+    # diffed — escaped: "#%'*/:=?[\]^{ plus controls; everything else
+    # (including space) passes verbatim, and the escape table only covers
+    # code points < 128 ('café' is written verbatim), so non-ASCII passes
+    # too.
     _HIVE_SAFE = frozenset(
         "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
         "_.- +,;<>@`|}~!$&()"
@@ -658,9 +544,10 @@ class ParquetStorage:
                     raise ValueError(
                         f"partition value {s!r} for column {p!r} contains "
                         f"characters Spark percent-escapes in Hive paths "
-                        f"({sorted(bad)}); pointer-mode partition repointing "
-                        "matches by dir name and would silently mispoint — "
-                        "sanitize the partition value or use commit='swap'"
+                        f"({sorted(bad)}); partition repointing matches by "
+                        "dir name and would silently mispoint — sanitize "
+                        "the partition value (or partition on a derived, "
+                        "escape-free column)"
                     )
             segs.append(f"{p}={s}")
         return os.path.join(*segs)
@@ -672,95 +559,20 @@ class ParquetStorage:
     def create_or_append(self, df: DataFrame, schema: TableSchema) -> None:
         """K2: append (creates on first write). Casts to the declared schema
         first — the declared-schema contract of K1. Serialized per table by
-        the writer lock (two appends never interleave their job commits).
-
-        Publish window: in pointer mode the rows land in an invisible
-        segment and publish via the fenced manifest flip (one syscall). In
-        swap mode the batch is STAGED to an invisible sibling dir by the
-        Spark job, then published by fenced file renames AFTER the job —
-        a first write publishes in one directory rename, a later append in
-        one rename per staged part file (metadata-only, milliseconds) —
-        so a stale-lock takeover during the possibly-long write job can no
-        longer double-publish (ADVICE r12 #2 closed structurally for both
-        modes)."""
+        the writer lock. The rows land in an invisible segment and publish
+        via the fenced manifest flip (one syscall), so a stale-lock
+        takeover during the possibly-long write job can never publish a
+        zombie's rows (ADVICE r12 #2)."""
         out = conform(df, schema)
         with self._locked(schema.table_name) as token:
-            if self.commit == "pointer":
-                seg, rps = self._write_segment(out, schema)
-                m = self._read_manifest(schema.table_name) or {"gen": 0, "parts": {}}
-                for rp in rps:
-                    m["parts"].setdefault(rp, []).append(seg)
-                m["gen"] = int(m["gen"]) + 1
-                m["writer"] = token
-                m["schema"] = out.schema.json()
-                self._flip_manifest(schema.table_name, m, token)
-                return
-            final = self.path(schema.table_name)
-            stage = f"{final}__stage_{uuid.uuid4().hex[:8]}"
-            writer = out.write.mode("overwrite")
-            if schema.partition_by:
-                writer = writer.partitionBy(
-                    *[c for c in schema.partition_by if c in out.columns]
-                )
-            writer.parquet(stage)
-            try:
-                self._check_fence(schema.table_name, token)
-                self._recover(schema.table_name)  # crashed-swap old dir, if any
-                if not os.path.exists(final):
-                    # first write: the whole staged dir publishes in ONE
-                    # rename, generation marker riding inside it
-                    self._write_generation(stage, 1, token, out.schema.json())
-                    try:
-                        self._dir_rename(stage, final)
-                        return
-                    except OSError:
-                        # a concurrent reader's _recover restored an
-                        # __old_ dir into final inside our existence
-                        # check's window — fall through and append into it
-                        self._check_fence(schema.table_name, token)
-                self._ingest_staged_files(stage, final)
-                self._write_generation(
-                    final,
-                    self.generation(schema.table_name) + 1,
-                    token,
-                    self._evolved_schema_json(schema.table_name, out.schema),
-                )
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-
-    @staticmethod
-    def _ingest_staged_files(stage: str, final: str) -> None:
-        """Move every staged data file into the live table tree, keeping
-        the Hive partition layout (dir names copied verbatim, so Spark's
-        own percent-escaping is preserved exactly). Part-file names embed
-        the writing job's UUID, so renames never collide with live files.
-        The publish is N fast metadata renames, not one atomic op — the
-        same exposure as a parquet job commit's task-file moves, but it
-        happens AFTER the fence check instead of inside a minutes-long
-        job, shrinking the takeover window to milliseconds. A driver-side
-        failure mid-loop rolls every moved file back into the stage dir,
-        so exceptions leave the live table exactly as it was (hard
-        crashes can still leave a partial append — documented residue)."""
-        moved: list[tuple[str, str]] = []
-        try:
-            for dirpath, _dirnames, filenames in os.walk(stage):
-                rel = os.path.relpath(dirpath, stage)
-                dst_dir = final if rel == "." else os.path.join(final, rel)
-                made = False
-                for fn in filenames:
-                    if fn.startswith(("_", ".")):
-                        continue  # _SUCCESS / hidden committer droppings
-                    if not made:
-                        os.makedirs(dst_dir, exist_ok=True)
-                        made = True
-                    src, dst = os.path.join(dirpath, fn), os.path.join(dst_dir, fn)
-                    os.rename(src, dst)
-                    moved.append((src, dst))
-        except BaseException:
-            for src, dst in reversed(moved):
-                with contextlib.suppress(OSError):
-                    os.rename(dst, src)
-            raise
+            seg, rps = self._write_segment(out, schema)
+            m = self._read_manifest(schema.table_name) or {"gen": 0, "parts": {}}
+            for rp in rps:
+                m["parts"].setdefault(rp, []).append(seg)
+            self._commit(
+                schema.table_name, m, token,
+                schema=self._evolved_schema(m.get("schema"), out.schema),
+            )
 
     def upsert(self, spark: SparkSession, df: DataFrame, schema: TableSchema) -> int:
         """K3 MERGE: keep existing rows whose keys don't collide (anti-join),
@@ -769,14 +581,14 @@ class ParquetStorage:
         (reference ingest_data.py:136-150).
 
         Partitioned tables take the pruned path: only partitions containing
-        incoming rows are read, merged, and rewritten (staged partition-dir
-        swap in swap mode; partition-pointer replacement in pointer
-        mode) — a 1-row upsert into a 100 TB table touches one partition,
-        not the table. Contract: partition values must be stable per unique
-        key (a key may not move between partitions), the same contract
-        Hive-style dynamic-overwrite MERGEs carry; the reference's Postgres
-        ON CONFLICT has no partitions so the question doesn't arise there.
-        Unpartitioned tables fall back to the full anti-join + rewrite.
+        incoming rows are read, merged, and rewritten (their pointer
+        entries replaced) — a 1-row upsert into a 100 TB table touches one
+        partition, not the table. Contract: partition values must be
+        stable per unique key (a key may not move between partitions), the
+        same contract Hive-style dynamic-overwrite MERGEs carry; the
+        reference's Postgres ON CONFLICT has no partitions so the question
+        doesn't arise there. Unpartitioned tables fall back to the full
+        anti-join + rewrite.
 
         Idempotent: re-upserting the same batch is a no-op by construction.
         Concurrent-writer safe (round 12): the read-merge-publish runs under
@@ -809,66 +621,13 @@ class ParquetStorage:
             return n
 
     def _full_rewrite(self, df: DataFrame, schema: TableSchema, token: str) -> None:
-        """Replace the whole table. Swap mode: atomic directory swap.
-        Pointer mode: one new segment owns every partition."""
-        if self.commit != "pointer":
-            self._atomic_write(df, schema, token)
-            return
+        """Replace the whole table: one new segment owns every partition."""
         seg, rps = self._write_segment(df, schema)
         m = {
-            "gen": self.generation(schema.table_name) + 1,
+            "gen": self.generation(schema.table_name),
             "parts": {rp: [seg] for rp in rps},
-            "writer": token,
-            "schema": df.schema.json(),
         }
-        self._flip_manifest(schema.table_name, m, token)
-
-    @staticmethod
-    def _hive_value_str(v) -> str:
-        """Canonical Hive dir-name text for one partition value (None and
-        '' fold to the default-partition token, booleans lowercase —
-        matching what Spark writes)."""
-        if v is None or v == "":
-            return "__HIVE_DEFAULT_PARTITION__"
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        return str(v)
-
-    @staticmethod
-    def _unescape_hive(s: str) -> str:
-        """Undo Hive percent-escaping in a partition dir value (%XX -> the
-        ASCII char). Unescaping is unambiguous whatever subset of chars
-        the writer escaped, so matching on unescaped text is exact."""
-        import re
-
-        return re.sub(
-            r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s
-        )
-
-    def _remove_partition_dirs(
-        self, root: str, parts: list[str], gone: set[tuple[str, ...]]
-    ) -> None:
-        """Remove the Hive partition directories whose UNESCAPED value
-        tuple is in ``gone`` (nested walk for multi-level layouts)."""
-
-        def walk(d: str, depth: int, values: tuple[str, ...]) -> None:
-            try:
-                entries = os.listdir(d)
-            except OSError:
-                return
-            for e in entries:
-                full = os.path.join(d, e)
-                name, sep, raw = e.partition("=")
-                if not sep or name != parts[depth] or not os.path.isdir(full):
-                    continue
-                vals = values + (self._unescape_hive(raw),)
-                if depth + 1 == len(parts):
-                    if vals in gone:
-                        shutil.rmtree(full, ignore_errors=True)
-                else:
-                    walk(full, depth + 1, vals)
-
-        walk(root, 0, ())
+        self._commit(schema.table_name, m, token, schema=df.schema.jsonValue())
 
     def _replace_partitions(
         self,
@@ -879,99 +638,25 @@ class ParquetStorage:
         token: str,
     ) -> None:
         """Publish a merged slice over exactly the ``touched`` partitions
-        (driver-side rows of partition values). Swap mode: the slice is
-        staged Hive-partitioned by ONE Spark job, then each staged
-        partition dir swaps over its live counterpart by fenced renames
-        (old slice parks in an __old_ trash dir until the publish
-        completes) — no second read+shuffle+write job, and the takeover
-        window is the rename loop, not a job (ADVICE r12 #2). Staged dir
-        names carry Spark's own percent-escaping and are matched
-        verbatim, so escapable values are fine here. Pointer mode: the
-        slice lands in a new segment and the touched partitions' pointer
-        entries are replaced in one manifest flip — repointing matches by
-        Hive dir name, so values Spark would escape are rejected in
-        _hive_relpath; a touched partition absent from the new slice
-        (deleted empty) drops out of the manifest / has its dir removed
-        (unescape-matched)."""
-        final = self.path(schema.table_name)
-        if self.commit == "pointer":
-            touched_rps = [self._hive_relpath(parts, row) for row in touched]
-            seg, rps = self._write_segment(merged, schema)
-            present = set(rps)
-            m = self._read_manifest(schema.table_name) or {"gen": 0, "parts": {}}
-            for rp in touched_rps:
-                if rp in present:
-                    m["parts"][rp] = [seg]
-                else:
-                    m["parts"].pop(rp, None)
-            m["gen"] = int(m["gen"]) + 1
-            m["writer"] = token
-            m["schema"] = merged.schema.json()
-            self._flip_manifest(schema.table_name, m, token)
-            return
-        # The merged plan READS the live partitions it replaces, so the
-        # slice must fully materialize before any live dir moves: one
-        # Hive-partitioned staging job, then dir swaps (previously this
-        # staged flat + re-shuffled through a second dynamic-overwrite
-        # job — twice the write work, and the job commit was the publish).
-        stage = f"{final}__stage_{uuid.uuid4().hex[:8]}"
-        merged.write.partitionBy(*parts).mode("overwrite").parquet(stage)
-        trash = f"{final}__old_{uuid.uuid4().hex[:8]}"
-        parked: list[tuple[str, str]] = []  # (park, dst)
-        placed: list[tuple[str, str]] = []  # (src, dst)
-        try:
-            self._check_fence(schema.table_name, token)
-            staged_rps = self._segment_relpaths(stage, len(parts))
-            try:
-                for rp in staged_rps:
-                    src, dst = os.path.join(stage, rp), os.path.join(final, rp)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    if os.path.exists(dst):
-                        # park, don't delete: until this publish completes
-                        # the old slice stays recoverable; a crash between
-                        # the two renames leaves it in the trash dir
-                        park = os.path.join(trash, rp)
-                        os.makedirs(os.path.dirname(park), exist_ok=True)
-                        os.rename(dst, park)
-                        parked.append((park, dst))
-                    os.rename(src, dst)
-                    placed.append((src, dst))
-            except BaseException:
-                # driver-side failure mid-loop: unwind so the live table is
-                # exactly as it was — new slices back to stage first (frees
-                # each dst), parked old slices restored second — BEFORE the
-                # finally deletes the trash dir; otherwise a parked-but-
-                # not-yet-replaced partition would be destroyed with it
-                for src, dst in reversed(placed):
-                    with contextlib.suppress(OSError):
-                        os.rename(dst, src)
-                for park, dst in reversed(parked):
-                    with contextlib.suppress(OSError):
-                        os.rename(park, dst)
-                raise
-            # a touched partition with NO staged dir lost its every row (a
-            # delete emptied it) — its stale live dir must go too, matched
-            # on UNESCAPED dir text so Hive percent-escaped values are
-            # handled exactly (round-13 review). For upserts touched is a
-            # subset of staged, so this is a no-op there.
-            staged_vals = {
-                tuple(self._unescape_hive(seg.split("=", 1)[1]) for seg in rp.split(os.sep))
-                for rp in staged_rps
-            }
-            gone = {
-                tuple(self._hive_value_str(r[p]) for p in parts) for r in touched
-            } - staged_vals
-            if gone:
-                self._remove_partition_dirs(final, parts, gone)
-            self._write_generation(
-                final,
-                self.generation(schema.table_name) + 1,
-                token,
-                self._evolved_schema_json(schema.table_name, merged.schema),
-            )
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(trash, ignore_errors=True)
+        (driver-side rows of partition values): the slice lands in a new
+        segment and the touched partitions' pointer entries are replaced
+        in one manifest flip. Repointing matches by Hive dir name, so
+        values Spark would escape are rejected in _hive_relpath; a touched
+        partition absent from the new slice (a delete emptied it) drops
+        out of the manifest."""
+        touched_rps = [self._hive_relpath(parts, row) for row in touched]
+        seg, rps = self._write_segment(merged, schema)
+        present = set(rps)
+        m = self._read_manifest(schema.table_name) or {"gen": 0, "parts": {}}
+        for rp in touched_rps:
+            if rp in present:
+                m["parts"][rp] = [seg]
+            else:
+                m["parts"].pop(rp, None)
+        self._commit(
+            schema.table_name, m, token,
+            schema=self._evolved_schema(m.get("schema"), merged.schema),
+        )
 
     def _upsert_pruned(
         self,
@@ -1043,141 +728,110 @@ class ParquetStorage:
             return self._count(spark, schema.table_name)
 
     def vacuum(self, table: str, retain_generations: int = 0) -> list[str]:
-        """Remove orphaned work a crashed writer left behind. Swap mode:
-        ``__tmp_*`` / ``__stage_*`` always (never live after a successful
-        write), ``__old_*`` only when the final directory exists (when it
-        does NOT, the old dir is the recovery source — see ``_recover``).
-        Pointer mode: prune history manifests outside the retention
-        window (``retain_generations`` prior generations stay
-        time-travelable; orphans above the current generation always go),
-        then sweep segment dirs referenced by NO remaining manifest and
-        stale manifest tmps — taken under the table lock so an in-flight
-        writer's not-yet-published segment is never swept. The default
-        ``retain_generations=0`` keeps only the current snapshot (time
-        travel is bounded by vacuum retention, as in any lakehouse
-        format). Listing-only, no data read; returns the removed paths."""
+        """Sweep what no retained manifest references: prune history
+        manifests outside the retention window (``retain_generations``
+        prior generations stay time-travelable; orphans above the current
+        generation always go), then remove segment dirs referenced by NO
+        remaining manifest (superseded by a later commit, or written by a
+        crashed writer), the partition dirs of live segments that no
+        remaining manifest points at, and stale manifest tmps — under the
+        table lock, so an in-flight writer's not-yet-published segment is
+        never swept.
+        The default ``retain_generations=0`` keeps only the current
+        snapshot (time travel is bounded by vacuum retention, as in any
+        lakehouse format). Listing-only, no data read; returns the removed
+        paths."""
         removed: list[str] = []
-        if self.commit == "pointer":
-            root = self.path(table)
-            if not os.path.exists(root):
-                return removed
-            with self._locked(table):
-                m = self._read_manifest(table)
-                cur = int(m["gen"]) if m else 0
-                floor = cur - max(0, retain_generations)
-                live = {
-                    seg
-                    for segs in ((m or {}).get("parts") or {}).values()
-                    for seg in segs
-                }
-                for e in sorted(os.listdir(root)):
-                    if not (
-                        e.startswith(self.HISTORY_PREFIX) and e.endswith(".json")
-                    ) or ".tmp_" in e:
-                        continue
-                    full = os.path.join(root, e)
-                    try:
-                        g = int(e[len(self.HISTORY_PREFIX) : -5])
-                    except ValueError:
-                        continue
-                    if g > cur or g < floor:
-                        # above current = crash orphan; below floor = out
-                        # of retention
-                        with contextlib.suppress(OSError):
-                            os.remove(full)
-                        removed.append(full)
-                    elif g != cur:
-                        # retained: its segments stay live for time travel
-                        with contextlib.suppress(OSError, ValueError):
-                            with open(full) as f:
-                                hm = json.load(f)
-                            live |= {
-                                seg
-                                for segs in (hm.get("parts") or {}).values()
-                                for seg in segs
-                            }
-                for e in os.listdir(root):
-                    full = os.path.join(root, e)
-                    if e.startswith("seg_") and os.path.isdir(full) and e not in live:
-                        shutil.rmtree(full, ignore_errors=True)
-                        removed.append(full)
-                    elif e.startswith(f"{self.MANIFEST}.tmp_") or (
-                        e.startswith(self.HISTORY_PREFIX) and ".tmp_" in e
-                    ):
-                        with contextlib.suppress(OSError):
-                            os.remove(full)
-                        removed.append(full)
+        root = self.path(table)
+        if not os.path.exists(root):
             return removed
-        self._recover(table)
-        final = self.path(table)
-        parent, base = os.path.dirname(final) or ".", os.path.basename(final)
-        if not os.path.exists(parent):
-            return removed
-        for d in os.listdir(parent):
-            full = os.path.join(parent, d)
-            if not os.path.isdir(full):
-                continue
-            if d.startswith(
-                (f"{base}__tmp_", f"{base}__stage_", f"{base}__lock.breaking_")
-            ) or (
-                d.startswith(f"{base}__old_") and os.path.exists(final)
-            ):
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
+        with self._locked(table):
+            m = self._read_manifest(table)
+            cur = int(m["gen"]) if m else 0
+            floor = cur - max(0, retain_generations)
+            live: dict[str, set[str]] = {}  # segment -> its live partitions
+
+            def keep(parts: dict) -> None:
+                for rp, segs in parts.items():
+                    for seg in segs:
+                        live.setdefault(seg, set()).add(rp)
+
+            keep((m or {}).get("parts") or {})
+            for e in sorted(os.listdir(root)):
+                if not (
+                    e.startswith(self.HISTORY_PREFIX) and e.endswith(".json")
+                ) or ".tmp_" in e:
+                    continue
+                full = os.path.join(root, e)
+                try:
+                    g = int(e[len(self.HISTORY_PREFIX) : -5])
+                except ValueError:
+                    continue
+                if g > cur or g < floor:
+                    # above current = crash orphan; below floor = out
+                    # of retention
+                    with contextlib.suppress(OSError):
+                        os.remove(full)
+                    removed.append(full)
+                elif g != cur:
+                    # retained: its segments stay live for time travel
+                    with contextlib.suppress(OSError, ValueError):
+                        with open(full) as f:
+                            keep(json.load(f).get("parts") or {})
+            for e in os.listdir(root):
+                full = os.path.join(root, e)
+                if e.startswith("seg_") and os.path.isdir(full):
+                    rps = live.get(e)
+                    if rps is None:
+                        dead = [full]
+                    elif "" in rps:
+                        dead = []
+                    else:
+                        # partitions repointed to a later segment: their
+                        # slice in this still-live segment is dead
+                        depth = next(iter(rps)).count(os.sep) + 1
+                        dead = [
+                            os.path.join(full, rp)
+                            for rp in self._segment_relpaths(full, depth)
+                            if rp not in rps
+                        ]
+                    for d in dead:
+                        shutil.rmtree(d, ignore_errors=True)
+                    removed.extend(dead)
+                elif e.startswith(f"{self.MANIFEST}.tmp_") or (
+                    e.startswith(self.HISTORY_PREFIX) and ".tmp_" in e
+                ):
+                    with contextlib.suppress(OSError):
+                        os.remove(full)
+                    removed.append(full)
         return removed
 
     def purge_partitions(self, schema: TableSchema, keep) -> list[dict]:
         """Retention purge: drop whole Hive-style partitions whose values
         fail the ``keep`` predicate (a callable over the partition-value
         dict, e.g. ``lambda v: int(v["year"]) >= 2020``). Metadata-only at
-        any scale — swap mode enumerates and removes directories; pointer
-        mode edits the manifest (the data files become vacuum-able
-        orphans); no data file is ever read. Returns the dropped
+        any scale — one manifest edit; the data files become vacuum-able
+        orphans and no data file is ever read. Returns the dropped
         partition-value dicts. This is the parquet-layout form of ``ALTER
         TABLE ... DROP PARTITION``; with a transactional format the same
         predicate drives a metadata delete."""
         if not schema.partition_by:
             raise ValueError("purge_partitions requires a partitioned schema")
         dropped: list[dict] = []
-        if self.commit == "pointer":
-            with self._locked(schema.table_name) as token:
-                m = self._read_manifest(schema.table_name)
-                if not m:
-                    return dropped
-                keep_parts: dict[str, list[str]] = {}
-                for rp, segs in m["parts"].items():
-                    values = dict(
-                        s.partition("=")[::2] for s in rp.split(os.sep)
-                    )
-                    if keep(values):
-                        keep_parts[rp] = segs
-                    else:
-                        dropped.append(values)
-                if dropped:
-                    m["parts"] = keep_parts
-                    m["gen"] = int(m["gen"]) + 1
-                    m["writer"] = token
-                    self._flip_manifest(schema.table_name, m, token)
-            return dropped
-        root = self.path(schema.table_name)
-
-        def walk(d: str, depth: int, values: dict) -> None:
-            if depth == len(schema.partition_by):
-                if not keep(values):
-                    shutil.rmtree(d)
-                    dropped.append(dict(values))
-                return
-            col = schema.partition_by[depth]
-            for entry in os.listdir(d):
-                if "=" not in entry:
-                    continue
-                name, _, raw = entry.partition("=")
-                if name != col:
-                    continue
-                walk(os.path.join(d, entry), depth + 1, {**values, col: raw})
-
-        if os.path.exists(root):
-            walk(root, 0, {})
+        with self._locked(schema.table_name) as token:
+            m = self._read_manifest(schema.table_name)
+            if not m:
+                return dropped
+            keep_parts: dict[str, list[str]] = {}
+            for rp, segs in m["parts"].items():
+                values = dict(s.partition("=")[::2] for s in rp.split(os.sep))
+                if keep(values):
+                    keep_parts[rp] = segs
+                else:
+                    dropped.append(values)
+            if dropped:
+                m["parts"] = keep_parts
+                self._commit(schema.table_name, m, token)
         return dropped
 
     def diff_generations(
@@ -1199,8 +853,6 @@ class ParquetStorage:
         snapshot reads — partition-parallel at any scale, no driver-side
         row handling; presence is detected via literal marker columns
         (NULL-proof) and change via null-safe per-column comparison."""
-        if self.commit != "pointer":
-            raise ValueError("diff_generations requires commit='pointer'")
         old = self.read(spark, table, as_of=from_gen)
         new = self.read(spark, table, as_of=to_gen)
         if not keys:
@@ -1252,19 +904,19 @@ class ParquetStorage:
         schema: TableSchema,
         max_segments: int = 4,
     ) -> dict[str, int]:
-        """Pointer-mode maintenance: every append adds one segment to each
-        partition it touches, so a long-lived append-mostly table's
-        manifest lists — and its readers' scan branches — grow without
-        bound (the storage twin of the streaming state store's per-batch
-        dir growth, bounded there by compact_state). Fold every partition
-        whose contributing-segment list exceeds ``max_segments`` into one
-        fresh segment and repoint, in a single manifest flip; untouched
+        """Maintenance: every append adds one segment to each partition it
+        touches, so a long-lived append-mostly table's manifest lists —
+        and its readers' scan branches — grow without bound (the storage
+        twin of the streaming state store's per-batch dir growth, bounded
+        there by compact_state). Fold every partition whose
+        contributing-segment list exceeds ``max_segments`` into one fresh
+        segment and repoint, in a single manifest flip; untouched
         partitions keep their pointers and their bytes. The superseded
         segments stay on disk (still safe for in-flight readers of the old
         manifest) until ``vacuum``. Returns {partition relpath: segments
-        folded}; no-op outside pointer mode or below the threshold."""
-        if self.commit != "pointer":
-            return {}
+        folded}; no-op below the threshold."""
+        from pyspark.sql.types import StructType
+
         with self._locked(schema.table_name) as token:
             m = self._read_manifest(schema.table_name)
             if not m:
@@ -1276,25 +928,8 @@ class ParquetStorage:
             }
             if not targets:
                 return {}
-            root = self.path(schema.table_name)
-            by_seg: dict[str, list[str]] = {}
-            for rp, segs in targets.items():
-                for seg in segs:
-                    by_seg.setdefault(seg, []).append(rp)
-            merged: DataFrame | None = None
-            for seg in sorted(by_seg):
-                segroot = os.path.join(root, seg)
-                rps = by_seg[seg]
-                if rps == [""]:
-                    part = spark.read.parquet(segroot)
-                else:
-                    part = spark.read.option("basePath", segroot).parquet(
-                        *[os.path.join(segroot, rp) for rp in sorted(rps)]
-                    )
-                merged = part if merged is None else merged.unionByName(
-                    part, allowMissingColumns=True
-                )
-            assert merged is not None
+            stamped = StructType.fromJson(m["schema"])
+            merged = self._scan(spark, schema.table_name, targets, stamped)
             new_seg, new_rps = self._write_segment(merged, schema)
             present = set(new_rps)
             for rp in targets:
@@ -1302,85 +937,15 @@ class ParquetStorage:
                     m["parts"][rp] = [new_seg]
                 else:  # a targeted partition held only empty files
                     m["parts"].pop(rp, None)
-            m["gen"] = int(m["gen"]) + 1
-            m["writer"] = token
-            self._flip_manifest(schema.table_name, m, token)
+            self._commit(schema.table_name, m, token)
             return {rp: len(segs) for rp, segs in targets.items()}
 
-    def _dir_rename(self, src: str, dst: str) -> None:
-        """Directory-publish rename, swap mode only. Indirection point: on
-        POSIX/HDFS this is atomic; a raw object store implements rename as
-        copy+delete, which is exactly the non-atomicity the pointer mode
-        exists to avoid (tests simulate it here)."""
-        os.rename(src, dst)
-
-    def _atomic_write(self, df: DataFrame, schema: TableSchema, token: str | None = None) -> None:
-        """Swap-mode full rewrite: write to a temp dir, then swap — the
-        closest to transactional overwrite plain parquet offers on a
-        rename-atomic filesystem (pointer mode replaces this on object
-        stores; Delta's MERGE INTO replaces both when a transactional
-        format is available). With a lock ``token``, the swap is fenced
-        (refused if the lock was taken over during the write) and the next
-        generation marker is staged INTO the temp dir, so the rename
-        publishes data + generation atomically."""
-        final = self.path(schema.table_name)
-        tmp = f"{final}__tmp_{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if schema.partition_by:
-            writer = writer.partitionBy(*[c for c in schema.partition_by if c in df.columns])
-        writer.parquet(tmp)
-        self._write_generation(
-            tmp,
-            self.generation(schema.table_name) + 1,
-            token or "unlocked",
-            df.schema.json(),  # full rewrite: the frame IS the table
-        )
-        if token is not None:
-            self._check_fence(schema.table_name, token)
-        # Swap with a bounded retry: an UNLOCKED concurrent reader's
-        # _recover can restore `old` back to `final` inside the one-syscall
-        # no-final window, making rename(tmp, final) raise ENOTEMPTY — the
-        # writer must win (its merge supersedes the restored state), so
-        # re-rename final away and try again (round-12 review: only the
-        # reader half of this race was handled).
-        old = f"{final}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(final):
-            self._dir_rename(final, old)
-        for attempt in range(3):
-            try:
-                self._dir_rename(tmp, final)
-                break
-            except OSError:
-                if attempt == 2:
-                    raise
-                bounce = f"{final}__old_{uuid.uuid4().hex[:8]}"
-                try:
-                    self._dir_rename(final, bounce)
-                except OSError:
-                    pass
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
     def _live_data_files(self, table: str) -> list[str]:
-        """Every parquet file the table's committed state references. Swap
-        mode: all data files under the table dir (nothing else is ever
-        live there). Pointer mode: only files inside the (segment,
-        partition) dirs the current manifest points at — superseded
-        segments awaiting vacuum are excluded."""
+        """Every parquet file the table's committed state references: only
+        files inside the (segment, partition) dirs the current manifest
+        points at — superseded segments awaiting vacuum are excluded."""
         files: list[str] = []
-
-        def data_files_under(d: str) -> None:
-            for dirpath, _dirs, names in os.walk(d):
-                files.extend(
-                    os.path.join(dirpath, f)
-                    for f in names
-                    if f.endswith(".parquet") and not f.startswith(("_", "."))
-                )
-
         root = self.path(table)
-        if self.commit != "pointer":
-            data_files_under(root)
-            return files
         m = self._read_manifest(table) or {}
         for rp, segs in (m.get("parts") or {}).items():
             for seg in segs:
@@ -1397,11 +962,9 @@ class ParquetStorage:
         """Row count after a commit — from parquet FOOTER metadata of the
         live data files (driver-side, exact, no Spark job, no data read):
         at 100 TB the per-write count this backs would otherwise be a
-        full-table scan. A table whose every row was just deleted can be
-        empty in a way the reader cannot type (swap mode: only
-        _SUCCESS/_generation left) — ``exists`` resolves that to 0.
-        Unreadable footers fall back to the scan (which would surface the
-        same corruption loudly)."""
+        full-table scan. A table whose every row was just deleted counts
+        0 (``exists`` is False). Unreadable footers fall back to the scan
+        (which would surface the same corruption loudly)."""
         if not self.exists(table):
             return 0
         try:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,15 +54,20 @@ def sql_davg(expr: str, alias: str, prec: int = 28, scale: int = 4) -> str:
 # emits one {"metric": "cache_build_sec", ...} line.
 # ---------------------------------------------------------------------------
 CACHE_BUILD_SECS: dict[str, float] = {}
+_CACHE_BUILD_LOCK = threading.Lock()
 
 
 def record_cache_build(label: str, sec: float) -> None:
-    CACHE_BUILD_SECS[label] = round(CACHE_BUILD_SECS.get(label, 0.0) + sec, 3)
+    # raw floats: reporters round once when they emit, so many small
+    # builds under one label carry no per-call rounding bias
+    with _CACHE_BUILD_LOCK:
+        CACHE_BUILD_SECS[label] = CACHE_BUILD_SECS.get(label, 0.0) + sec
 
 
 def drain_cache_build_secs() -> dict[str, float]:
-    out = dict(CACHE_BUILD_SECS)
-    CACHE_BUILD_SECS.clear()
+    with _CACHE_BUILD_LOCK:
+        out = dict(CACHE_BUILD_SECS)
+        CACHE_BUILD_SECS.clear()
     return out
 
 

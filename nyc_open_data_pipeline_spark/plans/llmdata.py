@@ -12,6 +12,8 @@ hyperplanes) — full cross-engine value parity, not just row counts.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -58,7 +60,9 @@ EMB_BUCKET_CAP = 2000
 # query invocations in one session reuse the same cache entry instead of
 # stacking a new persist per call (ADVICE r1: unbounded CacheManager growth).
 _HV_CACHE: dict = {}
-_HV_BUILD_DEPTH = 0  # nested-build guard for cache-build accounting
+# nested-build guard for cache-build accounting, per thread: concurrent
+# builds on different threads must not see each other's depth
+_HV_BUILD_DEPTH = threading.local()
 
 
 def _hv_get(spark: SparkSession, sf_dir: str, label: str, build, *extra):
@@ -94,9 +98,8 @@ def _hv_get(spark: SparkSession, sf_dir: str, label: str, build, *extra):
     # identical cached plan anyway. Builds can NEST (scored_pairs builds hv);
     # only the outermost build records, so the reported total counts each
     # second exactly once.
-    global _HV_BUILD_DEPTH
     t0 = _time.perf_counter()
-    _HV_BUILD_DEPTH += 1
+    _HV_BUILD_DEPTH.n = getattr(_HV_BUILD_DEPTH, "n", 0) + 1
     try:
         val = build()
         for v in (val if isinstance(val, tuple) else (val,)):
@@ -108,8 +111,8 @@ def _hv_get(spark: SparkSession, sf_dir: str, label: str, build, *extra):
                 except Exception:
                     pass
     finally:
-        _HV_BUILD_DEPTH -= 1
-    if _HV_BUILD_DEPTH == 0:
+        _HV_BUILD_DEPTH.n -= 1
+    if _HV_BUILD_DEPTH.n == 0:
         record_cache_build(label, _time.perf_counter() - t0)
     _HV_CACHE[key] = (mt, val)
     return val

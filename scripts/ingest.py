@@ -27,13 +27,6 @@ def main() -> int:
     ap.add_argument("--dry-run", action="store_true")
     ap.add_argument("--force", action="store_true", help="re-download cached files")
     ap.add_argument("--filter", default=None, help="JSON filter dict pushed to source")
-    ap.add_argument(
-        "--commit-mode",
-        choices=["swap", "pointer"],
-        default="swap",
-        help="table publish protocol: swap = POSIX/HDFS atomic directory "
-        "rename; pointer = object-store-portable manifest flip (S3-safe)",
-    )
     args = ap.parse_args()
 
     logging.basicConfig(level=logging.INFO)
@@ -47,7 +40,7 @@ def main() -> int:
 
     spark = get_spark("ingest")
     register_data_sources(spark)
-    storage = ParquetStorage(args.storage_root, commit=args.commit_mode)
+    storage = ParquetStorage(args.storage_root)
 
     registry = load_registry(args.registry)
     keys = (

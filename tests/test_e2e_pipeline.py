@@ -10,6 +10,7 @@ and the Zillow wide monthly matrix.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -157,7 +158,8 @@ def test_export_static_files(spark, warehouse, tmp_path):
 
 
 def test_upsert_reingest_is_stable(spark, warehouse):
-    # re-ingest the same ACS fixture: counts unchanged (K3 idempotence)
+    # re-ingest the same fixtures: counts unchanged (K3 idempotence) for an
+    # unpartitioned (ACS) and a year-partitioned (food) table
     acs_raw = spark.createDataFrame(
         [
             ("200", "1000", "55000", "10001"),
@@ -166,10 +168,27 @@ def test_upsert_reingest_is_stable(spark, warehouse):
         ],
         ["B17001_002E", "B17001_001E", "B19013_001E", "zcta"],
     )
-    before = spark.read.parquet(warehouse.path("census_acs_poverty")).count()
+    before = warehouse.read(spark, "census_acs_poverty").count()
     ingest_dataset(spark, load_dataset_config(REGISTRY, "census_acs"), warehouse, raw_df=acs_raw)
-    after = spark.read.parquet(warehouse.path("census_acs_poverty")).count()
+    after = warehouse.read(spark, "census_acs_poverty").count()
     assert before == after == 3
+    food = warehouse.read(spark, "food_supply_gaps")
+    food_raw = spark.createDataFrame(
+        [(":r9", "2023", "NTA002", "Beta", "Queens", "950.0", "45.0", "3")],
+        [":id", "Data Year", "NTA2020", "NTAName", "Boro", "Supply Gap", "Supply Gap Percent", "Gap Rank"],
+    )
+    n_food = food.count()
+    ingest_dataset(spark, load_dataset_config(REGISTRY, "food_supply_gap"), warehouse, raw_df=food_raw)
+    assert warehouse.read(spark, "food_supply_gaps").count() == n_food
+    # every ingest commit is followed by a vacuum: each table dir holds the
+    # pointer, the current generation's manifest, and only live segments
+    for table in ("census_acs_poverty", "food_supply_gaps", warehouse.META_TABLE):
+        m = warehouse._read_manifest(table)
+        live = {seg for segs in m["parts"].values() for seg in segs}
+        root = warehouse.path(table)
+        assert set(os.listdir(root)) == live | {
+            "_current", os.path.basename(warehouse._history_path(table, m["gen"]))
+        }
 
 
 def test_write_cleanroom_partitioned_by_split(spark, sf_dir, tmp_path):
@@ -218,42 +237,3 @@ def test_jsonl_roundtrip_cleanroom(spark, sf_dir, tmp_path):
     import glob
 
     assert glob.glob(f"{out}/split=*/*.json.gz"), "expected gzipped JSONL part files"
-
-
-def test_pointer_mode_ingest_to_served_document(spark, tmp_path):
-    """Round 13: the full ingest -> transform -> upsert -> serve path must
-    be commit-mode agnostic — the same two datasets the swap warehouse
-    fixture loads, ingested into a POINTER-mode store (manifest-flip
-    publish, no directory renames), must serve the same food-gaps GeoJSON
-    document through storage.read resolution."""
-    storage = ParquetStorage(str(tmp_path / "ptr_wh"), commit="pointer")
-    food_raw = spark.createDataFrame(
-        [
-            (":r1", "2023", "NTA001", "Alpha", "Manhattan", "1100.0", "50.0", "1"),
-            (":r2", "2023", "NTA002", "Beta", "Queens", "950.0", "45.0", "2"),
-        ],
-        [":id", "Data Year", "NTA2020", "NTAName", "Boro", "Supply Gap", "Supply Gap Percent", "Gap Rank"],
-    )
-    ingest_dataset(
-        spark, load_dataset_config(REGISTRY, "food_supply_gap"), storage, raw_df=food_raw
-    )
-    ntas_raw = spark.createDataFrame(
-        [
-            (":x", "NTA001", "Alpha", "Manhattan", "123.4", POLY_A),
-            (":y", "NTA002", "Beta", "Queens", "222.2", POLY_B),
-        ],
-        [":id", "NTA2020", "NTAName", "BoroName", "Shape_STAr", "the_geom"],
-    )
-    ingest_dataset(
-        spark, load_dataset_config(REGISTRY, "ntas_2020"), storage, raw_df=ntas_raw
-    )
-    # the manifest, not a bare table dir, is the committed state
-    assert storage._read_manifest("food_supply_gaps") is not None
-    doc = json.loads(food_gaps_document(spark, storage))
-    codes = sorted(f["properties"]["nta2020"] for f in doc["features"])
-    assert codes == ["NTA001", "NTA002"]
-    # re-ingest idempotence holds through the pointer protocol too
-    ingest_dataset(
-        spark, load_dataset_config(REGISTRY, "food_supply_gap"), storage, raw_df=food_raw
-    )
-    assert storage.read(spark, "food_supply_gaps").count() == 2

@@ -1262,3 +1262,49 @@ def test_cache_build_accounting(spark, sf_dir):
     assert drain_cache_build_secs() == {"ut_x": 0.75}
     df.unpersist()
     del L._HV_CACHE[(spark.sparkContext.applicationId, sf_dir, key_label)]
+
+
+def test_cache_build_accounting_sums_small_builds_without_rounding():
+    """Many sub-millisecond builds under one label must sum to their true
+    total: rounding each accumulation to the millisecond would drop every
+    0.4 ms build and report 0."""
+    from nyc_open_data_pipeline_spark.plans.common import (
+        drain_cache_build_secs,
+        record_cache_build,
+    )
+
+    drain_cache_build_secs()
+    for _ in range(1000):
+        record_cache_build("ut_small", 0.0004)
+    assert drain_cache_build_secs()["ut_small"] == pytest.approx(0.4)
+
+
+def test_cache_build_depth_is_per_thread(spark, tmp_path):
+    """The nested-build guard counts depth per thread: a build on one
+    thread while another thread's build is still running is outermost on
+    its own thread, so it records its seconds."""
+    import threading
+
+    from nyc_open_data_pipeline_spark.plans import llmdata as L
+    from nyc_open_data_pipeline_spark.plans.common import drain_cache_build_secs
+
+    drain_cache_build_secs()
+    inside, release = threading.Event(), threading.Event()
+
+    def slow_build():
+        inside.set()
+        release.wait(30)
+        return "slow"
+
+    t = threading.Thread(target=L._hv_get, args=(spark, str(tmp_path), "ut_slow", slow_build))
+    t.start()
+    try:
+        assert inside.wait(30)
+        L._hv_get(spark, str(tmp_path), "ut_fast", lambda: "fast")
+    finally:
+        release.set()
+        t.join(30)
+    assert set(drain_cache_build_secs()) == {"ut_slow", "ut_fast"}
+    app = spark.sparkContext.applicationId
+    for label in ("ut_slow", "ut_fast"):
+        del L._HV_CACHE[(app, str(tmp_path), label)]

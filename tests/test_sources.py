@@ -461,8 +461,8 @@ def test_socrata_stream_ingest_e2e(spark, server, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def table_count() -> int:
-        # a poll may land inside an upsert's atomic-swap window — treat any
-        # transient read failure as "not there yet", never as a test error
+        # treat any transient read failure (e.g. a poll racing the vacuum
+        # that follows each commit) as "not there yet", never as a test error
         try:
             if not storage.exists("stream_gap"):
                 return -1
@@ -514,12 +514,12 @@ def test_socrata_stream_ingest_e2e(spark, server, tmp_path):
 
 
 def test_socrata_stream_ingest_pointer_mode(spark, server, tmp_path):
-    """Round 13: continuous API ingest against a POINTER-mode store —
-    every micro-batch's upsert publishes via the manifest flip instead of
-    swap renames, and the lifecycle (transform -> upsert -> metadata)
-    must converge identically. Single-leg twin of the swap e2e above
-    (restart/replay semantics are commit-mode-independent and covered by
-    the pointer idempotence tests)."""
+    """Continuous API ingest publishes every micro-batch through the
+    manifest flip, and the shared store step vacuums after each commit:
+    once the stream converges, the data and metadata tables hold only the
+    segments their manifests reference and only the current generation
+    file, however many micro-batches committed. (Restart/replay semantics
+    are covered by the e2e test above.)"""
     import time
 
     from nyc_open_data_pipeline_spark.config import DatasetConfig, DatasetEntry
@@ -536,7 +536,7 @@ def test_socrata_stream_ingest_pointer_mode(spark, server, tmp_path):
         api={"url": server, "limit": 10},
         raw={"raw_schema_ddl": "nta_code string, year int, gap double"},
     )
-    storage = ParquetStorage(str(tmp_path / "tables"), commit="pointer")
+    storage = ParquetStorage(str(tmp_path / "tables"))
     ckpt = str(tmp_path / "ckpt")
 
     def table_count() -> int:
@@ -560,14 +560,25 @@ def test_socrata_stream_ingest_pointer_mode(spark, server, tmp_path):
         except Exception:
             pass
     assert storage._count(spark, "stream_gap") == 25
-    m = storage._read_manifest("stream_gap")
-    assert m is not None and m["gen"] >= 1  # published through the manifest
-    # metadata flows through the same pointer protocol; it may lag the
-    # table by the stopped-mid-flight batch (the swap e2e's restart leg
-    # covers the catch-up; here only the publish protocol is under test)
+    # metadata may lag the table by the stopped-mid-flight batch (the e2e
+    # test's restart leg covers the catch-up)
     meta = {r["dataset_id"]: r["record_count"]
             for r in storage.read_metadata(spark).collect()}
     assert meta.get("stream_gap") is None or meta["stream_gap"] <= 25
+    # one generation per micro-batch (25 rows, 10 per page, one page per
+    # batch), but the per-commit vacuum keeps at most the current one plus
+    # one left by a batch stopped between its commit and its vacuum
+    m = storage._read_manifest("stream_gap")
+    gens = [e for e in os.listdir(storage.path("stream_gap")) if e.startswith("_gen_")]
+    assert m["gen"] >= 3 and len(gens) <= 2, (m["gen"], gens)
+    for table in ("stream_gap", storage.META_TABLE):
+        storage.vacuum(table)
+        m = storage._read_manifest(table)
+        assert m["gen"] >= 1
+        live = {seg for segs in m["parts"].values() for seg in segs}
+        assert set(os.listdir(storage.path(table))) == live | {
+            "_current", os.path.basename(storage._history_path(table, m["gen"]))
+        }
 
 
 def test_socrata_max_concurrency_caps_inflight_requests(spark, server):

@@ -1,20 +1,20 @@
-"""Pointer-file (manifest) commit mode + lock lease heartbeat (round 13).
+"""The manifest-flip commit protocol + lock lease heartbeat.
 
-The swap-mode protocol publishes via directory rename / Spark job commits —
-POSIX/HDFS-atomic but not raw-object-store-safe (S3 directory rename is
-copy+delete). Pointer mode writes every change to an immutable segment and
-publishes by atomically replacing ONE ``_current`` manifest file, so these
-tests re-run the swap suite's concurrency/crash scenarios in pointer mode
-and add the two cases swap mode cannot pass: a simulated non-atomic
-directory rename, and a live-but-slow cross-host writer that the lease
-heartbeat must protect from takeover (VERDICT r12 next-round #1/#2,
-ADVICE r12 storage findings).
+Every change is written to an immutable segment and published by
+atomically replacing ONE ``_current`` pointer file, so no directory is ever
+renamed — the protocol is safe where directory rename is copy+delete (raw
+object stores). These tests cover its concurrency/crash scenarios, reads
+under the manifest's stamped schema, crash-consistency fuzzing of the
+publish, time travel, and a live-but-slow cross-host writer that the lease
+heartbeat must protect from takeover (VERDICT r12 next-round #1/#2, ADVICE
+r12 storage findings).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import socket
 import threading
 import time
@@ -51,7 +51,7 @@ def _part_schema() -> TableSchema:
 
 
 def test_pointer_upsert_idempotent_and_merge(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     batch1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
     assert storage.upsert(spark, batch1, schema) == 2
@@ -64,11 +64,11 @@ def test_pointer_upsert_idempotent_and_merge(spark, tmp_path):
 
 
 def test_pointer_upsert_partition_pruned_never_rewrites_untouched(spark, tmp_path):
-    """The pointer twin of the swap suite's pruned-upsert contract: the
+    """The pruned-upsert contract at the segment level: the
     untouched partition's FILES (inside their owning segment) keep their
     mtimes, and the manifest still points the untouched partition at the
     original segment."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2023, "a"), (2, 2023, "b"), (3, 2024, "c"), (4, 2024, "d")],
@@ -99,7 +99,7 @@ def test_pointer_upsert_partition_pruned_never_rewrites_untouched(spark, tmp_pat
 
 
 def test_pointer_append_grows_segment_list_and_metadata_roundtrip(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = TableSchema(table_name="logs", columns=[ColumnSpec("x", "integer")])
     df = spark.createDataFrame([(1,), (2,)], ["x"])
     storage.create_or_append(df, schema)
@@ -116,7 +116,7 @@ def test_pointer_append_grows_segment_list_and_metadata_roundtrip(spark, tmp_pat
 
 
 def test_pointer_delete_keys_pruned_and_unpartitioned(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2023, "a"), (2, 2023, "b"), (3, 2024, "c"), (4, 2024, "d")],
@@ -135,14 +135,14 @@ def test_pointer_delete_keys_pruned_and_unpartitioned(spark, tmp_path):
     assert storage.delete_keys(spark, both, schema) == 2
     assert "year=2024" not in storage._read_manifest("t")["parts"]
 
-    st2 = ParquetStorage(str(tmp_path / "u"), commit="pointer")
+    st2 = ParquetStorage(str(tmp_path / "u"))
     kv = _kv_schema()
     st2.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), kv)
     assert st2.delete_keys(spark, spark.createDataFrame([(2,)], ["k"]), kv) == 1
 
 
 def test_pointer_purge_partitions_is_manifest_only(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2019, "a"), (2, 2020, "b"), (3, 2021, "c")], ["k", "year", "v"]
@@ -157,7 +157,7 @@ def test_pointer_purge_partitions_is_manifest_only(spark, tmp_path):
 
 
 def test_pointer_schema_evolution(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     storage.upsert(
         spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), _kv_schema()
     )
@@ -176,7 +176,7 @@ def test_pointer_schema_evolution(spark, tmp_path):
     assert rows == {1: ("a", None), 2: ("B2", "x"), 3: ("c", "y")}
 
     # evolution through APPEND: old segments lack the new column -> NULL
-    st2 = ParquetStorage(str(tmp_path / "ap"), commit="pointer")
+    st2 = ParquetStorage(str(tmp_path / "ap"))
     s1 = TableSchema(table_name="logs", columns=[ColumnSpec("x", "integer")])
     s2 = TableSchema(
         table_name="logs",
@@ -189,9 +189,9 @@ def test_pointer_schema_evolution(spark, tmp_path):
 
 
 def test_pointer_concurrent_upserts_serialize(spark, tmp_path):
-    """The swap suite's two-writer interleave, in pointer mode: the
-    manifest flip under the table lock must serialize every batch."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    """Two-writer interleave: the manifest flip under the table lock must
+    serialize every batch."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(0, "seed")], ["k", "v"]), schema)
     errors: list[BaseException] = []
@@ -217,11 +217,11 @@ def test_pointer_concurrent_upserts_serialize(spark, tmp_path):
 
 
 def test_pointer_crash_before_flip_leaves_committed_state(spark, tmp_path):
-    """The pointer twin of the mid-swap crash test: a writer that wrote its
-    segment but died before the manifest flip leaves the PREVIOUS commit
-    fully intact (manifest + every referenced segment), the orphan segment
-    invisible to readers, and vacuum sweeps it."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    """A writer that wrote its segment but died before the manifest flip
+    leaves the PREVIOUS commit fully intact (manifest + every referenced
+    segment), the orphan segment invisible to readers, and vacuum sweeps
+    it."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), schema)
     m_before = storage._read_manifest("t")
@@ -245,11 +245,9 @@ def test_pointer_crash_before_flip_leaves_committed_state(spark, tmp_path):
 
 
 def test_pointer_stale_lock_takeover_and_fence(spark, tmp_path):
-    """The swap suite's takeover/fence scenario in pointer mode: a dead
-    writer's lock breaks, the zombie is refused at the manifest flip."""
-    storage = ParquetStorage(
-        str(tmp_path), lock_timeout=0.5, lock_stale_after=0.2, commit="pointer"
-    )
+    """Takeover/fence: a dead writer's lock breaks, the zombie is refused
+    at the manifest flip."""
+    storage = ParquetStorage(str(tmp_path), lock_timeout=0.5, lock_stale_after=0.2)
     schema = _kv_schema()
     lock = storage._lock_dir("t")
     os.makedirs(lock)
@@ -267,51 +265,35 @@ def test_pointer_stale_lock_takeover_and_fence(spark, tmp_path):
     assert storage.generation("t") == 1  # zombie's manifest never landed
 
 
-def test_simulated_non_atomic_rename_breaks_swap_not_pointer(spark, tmp_path):
+def test_simulated_non_atomic_rename_breaks_swap_not_pointer(spark, tmp_path, monkeypatch):
     """THE object-store case (VERDICT r12 next-round #1): directory rename
-    implemented as copy+delete that dies mid-copy. Swap mode corrupts or
-    loses the table; pointer mode never renames a directory, so the same
-    fault injection cannot even fire and the upsert commits exactly."""
+    implemented as copy+delete that dies mid-copy — the fault that broke
+    the retired rename-publish protocol. The manifest flip never renames a
+    directory, so with every directory rename failing that way, upserts,
+    appends and deletes still commit exactly."""
+    real_rename = os.rename
 
-    def faulty_rename(src: str, dst: str) -> None:
-        # copy the data files, delete them from src, then die before the
-        # metadata — the observable wreckage of a crashed S3 copy+delete
-        # "rename": neither dir is a complete table
-        import shutil as _sh
+    def faulty_rename(src, dst):
+        if os.path.isdir(src):
+            raise OSError("simulated mid-copy crash of a non-atomic rename")
+        return real_rename(src, dst)
 
-        os.makedirs(dst, exist_ok=True)
-        for e in sorted(os.listdir(src)):
-            if not e.endswith(".parquet"):
-                continue
-            s = os.path.join(src, e)
-            d = os.path.join(dst, e)
-            (_sh.copytree if os.path.isdir(s) else _sh.copyfile)(s, d)
-            (_sh.rmtree if os.path.isdir(s) else os.remove)(s)
-        raise OSError("simulated mid-copy crash of a non-atomic rename")
-
-    schema = _kv_schema()
-    base = [(1, "a"), (2, "b")]
-
-    swap = ParquetStorage(str(tmp_path / "swap"))
-    swap.upsert(spark, spark.createDataFrame(base, ["k", "v"]), schema)
-    swap._dir_rename = faulty_rename  # instance-level fault injection
-    with pytest.raises(OSError, match="non-atomic"):
-        swap.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema)
-    # the table is wrecked: the committed {1,2} state is NOT intact at its path
-    intact = False
-    try:
-        got = {r["k"] for r in spark.read.parquet(swap.path("t")).collect()}
-        intact = got == {1, 2, 3} or got == {1, 2}
-    except Exception:
-        intact = False
-    assert not intact, "swap survived a non-atomic rename? fault injection broken"
-
-    pointer = ParquetStorage(str(tmp_path / "ptr"), commit="pointer")
-    pointer.upsert(spark, spark.createDataFrame(base, ["k", "v"]), schema)
-    pointer._dir_rename = faulty_rename  # never called in pointer mode
-    assert pointer.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema) == 3
-    rows = {r["k"]: r["v"] for r in pointer.read(spark, "t").collect()}
-    assert rows == {1: "a", 2: "b", 3: "c"}
+    schema = _part_schema()
+    storage = ParquetStorage(str(tmp_path))
+    monkeypatch.setattr(os, "rename", faulty_rename)
+    storage.upsert(
+        spark, spark.createDataFrame([(1, 2020, "a"), (2, 2021, "b")], ["k", "year", "v"]), schema
+    )
+    assert storage.upsert(
+        spark, spark.createDataFrame([(3, 2021, "c")], ["k", "year", "v"]), schema
+    ) == 3
+    storage.create_or_append(spark.createDataFrame([(4, 2022, "d")], ["k", "year", "v"]), schema)
+    assert storage.delete_keys(
+        spark, spark.createDataFrame([(1, 2020)], ["k", "year"]), schema
+    ) == 3
+    storage.vacuum("t")
+    rows = {r["k"]: r["v"] for r in storage.read(spark, "t").collect()}
+    assert rows == {2: "b", 3: "c", 4: "d"}
 
 
 def test_heartbeat_protects_live_crosshost_writer(spark, tmp_path):
@@ -371,7 +353,7 @@ def test_pointer_compact_segments_bounds_manifest_growth(spark, tmp_path):
     maintenance fold must collapse over-threshold partitions into one
     segment, preserve every row, leave untouched partitions' pointers and
     bytes alone, and make the superseded segments vacuum-able."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = TableSchema(
         table_name="logs",
         columns=[ColumnSpec("x", "integer"), ColumnSpec("part", "integer")],
@@ -401,8 +383,6 @@ def test_pointer_compact_segments_bounds_manifest_growth(spark, tmp_path):
     assert rows2 == rows
     # idempotent below threshold
     assert storage.compact_segments(spark, schema, max_segments=4) == {}
-    # swap mode: explicit no-op
-    assert ParquetStorage(str(tmp_path / "sw")).compact_segments(spark, schema) == {}
 
 
 def _str_part_schema() -> TableSchema:
@@ -419,13 +399,13 @@ def _str_part_schema() -> TableSchema:
 
 
 def test_pointer_rejects_escapable_partition_values_loudly(spark, tmp_path):
-    """Round-13 self-review: pointer-mode repointing matches partitions by
-    Hive DIR NAME, and Spark percent-escapes some characters — a mismatch
-    would silently leave the stale pointer serving old rows while the
-    merged partition dropped from the manifest. Safe values (spaces,
-    dashes, dots) must round-trip exactly; escapable ones must raise, not
-    corrupt. Swap mode keeps accepting them (Spark escapes for itself)."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    """Round-13 self-review: repointing matches partitions by Hive DIR
+    NAME, and Spark percent-escapes some characters — a mismatch would
+    silently leave the stale pointer serving old rows while the merged
+    partition dropped from the manifest. Safe values (spaces, dashes,
+    dots) must round-trip exactly; escapable ones must raise, not
+    corrupt, on every repointing write (upsert, delete)."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
     ok = spark.createDataFrame(
         [(1, "common crawl", "a"), (2, "web-2024.v1", "b")], ["k", "src", "v"]
@@ -439,24 +419,21 @@ def test_pointer_rejects_escapable_partition_values_loudly(spark, tmp_path):
     bad = spark.createDataFrame([(3, "a:b", "c")], ["k", "src", "v"])
     with pytest.raises(ValueError, match="percent-escapes"):
         storage.upsert(spark, bad, schema)
-    # nothing was published by the refused write
+    with pytest.raises(ValueError, match="percent-escapes"):
+        storage.delete_keys(spark, bad.select("k", "src"), schema)
+    # nothing was published by the refused writes
     assert storage.read(spark, "t").count() == 2
-
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    swap.upsert(spark, ok, schema)
-    assert swap.upsert(spark, bad, schema) == 3  # swap handles escaping fine
+    assert storage.generation("t") == 2
 
 
 def test_pointer_readers_get_snapshot_isolation(spark, tmp_path):
-    """A property swap mode cannot offer: a DataFrame resolved from the
-    manifest BEFORE a rewrite keeps reading the OLD segments after the
-    flip, because published segments are immutable and survive until
-    vacuum — in swap mode the old directory is rmtree'd inside the swap,
-    so a long-running reader's scan breaks or goes torn mid-job. This is
-    the read-side reason the pointer protocol is the 100-TB mode: queries
-    running for minutes against a table being upserted see one consistent
-    snapshot."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    """A DataFrame resolved from the manifest BEFORE a rewrite keeps
+    reading the OLD segments after the flip, because published segments
+    are immutable and survive until vacuum (a protocol that deletes the
+    old files inside the publish breaks a long-running reader's scan
+    mid-job). Queries running for minutes against a table being upserted
+    see one consistent snapshot."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), schema)
     old_reader = storage.read(spark, "t")  # resolves gen-1's segments NOW
@@ -478,7 +455,7 @@ def test_pointer_empty_string_partition_value_repoints_correctly(spark, tmp_path
     computing 'col=' for an empty string orphaned the merged slice — the
     upsert silently kept serving old rows. The canonical relpath must
     fold '' the same way Spark does."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
     base = spark.createDataFrame([(1, "", "a"), (2, "x", "b")], ["k", "src", "v"])
     assert storage.upsert(spark, base, schema) == 2
@@ -492,8 +469,10 @@ def test_pointer_corrupt_manifest_refuses_instead_of_fresh_start(spark, tmp_path
     """Round-13 review: a corrupt _current must NOT read as 'never
     committed' — the next append would build a fresh gen-1 manifest that
     orphans every committed segment, and vacuum would then delete them.
-    Corruption must raise loudly on every entry point."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    Corruption must raise loudly on every entry point, and so must a
+    table dir in the retired rename-publish layout (bare parquet files
+    plus a ``_generation`` marker, no manifest)."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a")], ["k", "v"]), schema)
     with open(storage._manifest_path("t"), "w") as f:
@@ -508,12 +487,19 @@ def test_pointer_corrupt_manifest_refuses_instead_of_fresh_start(spark, tmp_path
     segs = [e for e in os.listdir(storage.path("t")) if e.startswith("seg_")]
     assert segs, "committed segment vanished under a corrupt manifest"
 
+    legacy = storage.path("old")
+    spark.createDataFrame([(1, "a")], ["k", "v"]).write.parquet(legacy)
+    with open(os.path.join(legacy, "_generation"), "w") as f:
+        json.dump({"gen": 1}, f)
+    with pytest.raises(RuntimeError, match="retired rename-publish layout"):
+        storage.exists("old")
+
 
 def test_pointer_delete_to_empty_table_reads_typed_empty(spark, tmp_path):
-    """A legitimately-committed pointer table whose every partition was
+    """A legitimately-committed table whose every partition was
     deleted must stay readable (typed empty frame from the stamped
     schema), not crash after the commit succeeded."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     storage.upsert(
         spark, spark.createDataFrame([(1, 2024, "a")], ["k", "year", "v"]), schema
@@ -582,50 +568,51 @@ def test_heartbeat_survives_transient_utime_failures(tmp_path, monkeypatch):
 
 
 def test_swap_delete_empties_partition_directory(spark, tmp_path):
-    """Round-13 review: dynamic partition overwrite only replaces
-    partitions PRESENT in the written data, so a delete that removed a
-    partition's every row previously left the stale directory serving
-    the 'deleted' rows. The emptied dir must be removed — including for
-    Hive percent-escaped partition values (matched on unescaped text)."""
-    storage = ParquetStorage(str(tmp_path))  # swap mode
+    """Round-13 review: a delete that removed a partition's every row must
+    stop serving it — the emptied partition drops out of the manifest, and
+    the ingest-time vacuum removes its directory from the still-live
+    segment while the segment's other partitions keep serving."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
     base = spark.createDataFrame(
-        [(1, "a:b", "x"), (2, "a:b", "y"), (3, "keep", "z")], ["k", "src", "v"]
+        [(1, "gone", "x"), (2, "gone", "y"), (3, "keep", "z")], ["k", "src", "v"]
     )
     assert storage.upsert(spark, base, schema) == 3
-    assert os.path.exists(os.path.join(storage.path("t"), "src=a%3Ab"))
-    gone = spark.createDataFrame([(1, "a:b"), (2, "a:b")], ["k", "src"])
+    (seg,) = storage._read_manifest("t")["parts"]["src=gone"]
+    gone_dir = os.path.join(storage.path("t"), seg, "src=gone")
+    assert os.path.isdir(gone_dir)
+    gone = spark.createDataFrame([(1, "gone"), (2, "gone")], ["k", "src"])
     assert storage.delete_keys(spark, gone, schema) == 1
-    assert not os.path.exists(os.path.join(storage.path("t"), "src=a%3Ab")), (
-        "emptied (escaped-name) partition directory kept serving deleted rows"
-    )
+    assert "src=gone" not in storage._read_manifest("t")["parts"]
+    assert gone_dir in storage.vacuum("t")
+    assert not os.path.exists(gone_dir), "emptied partition directory kept on disk"
     rows = {(r["k"], r["src"]) for r in storage.read(spark, "t").collect()}
     assert rows == {(3, "keep")}
-    # partial delete must NOT remove a partition that still has rows
+    # partial delete must NOT drop a partition that still has rows
     storage.upsert(spark, base, schema)
-    one = spark.createDataFrame([(1, "a:b")], ["k", "src"])
+    one = spark.createDataFrame([(1, "gone")], ["k", "src"])
     assert storage.delete_keys(spark, one, schema) == 2
-    assert os.path.exists(os.path.join(storage.path("t"), "src=a%3Ab"))
+    assert "src=gone" in storage._read_manifest("t")["parts"]
     # deleting EVERY row of EVERY partition: the commit succeeds and the
-    # count resolves to 0 (only _SUCCESS/_generation remain on disk)
-    rest = spark.createDataFrame([(2, "a:b"), (3, "keep")], ["k", "src"])
+    # count resolves to 0
+    rest = spark.createDataFrame([(2, "gone"), (3, "keep")], ["k", "src"])
     assert storage.delete_keys(spark, rest, schema) == 0
     assert not storage.exists("t")
 
 
-def _steal_lock_during_stage_write(monkeypatch, storage):
-    """Arrange for the table lock to be stolen WHILE the Spark staging job
-    of the next swap-mode write runs: wrap DataFrameWriter.parquet so that
-    any write landing in a __stage_ dir first completes, then has the lock
-    owner token swapped — modeling a stale-lock takeover that happens
-    mid-job. The write must then FENCE and publish nothing."""
+def _steal_lock_during_segment_write(monkeypatch, storage):
+    """Arrange for the table lock to be stolen WHILE the Spark job writing
+    the next segment runs: wrap DataFrameWriter.parquet so that any write
+    landing in a seg_ dir first completes, then has the lock owner token
+    swapped — modeling a stale-lock takeover that happens mid-job. The
+    write must then FENCE and publish nothing."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     orig = DataFrameWriter.parquet
 
     def stealing(self, path, *a, **kw):
         out = orig(self, path, *a, **kw)
-        if "__stage_" in path:
+        if os.path.basename(path).startswith("seg_"):
             owner = os.path.join(storage._lock_dir("t"), "owner.json")
             with open(owner) as f:
                 rec = json.load(f)
@@ -638,17 +625,16 @@ def _steal_lock_during_stage_write(monkeypatch, storage):
 
 
 def test_swap_append_fences_takeover_during_write_job(spark, tmp_path, monkeypatch):
-    """ADVICE r12 #2 closed structurally in SWAP mode: create_or_append
-    stages the batch and publishes by post-fence renames, so a stale-lock
-    takeover during the (possibly minutes-long) append job leaves the
-    zombie's rows UNPUBLISHED — previously the job commit itself was the
-    publish and the zombie's rows landed before the fence could refuse."""
+    """ADVICE r12 #2: a stale-lock takeover during the (possibly
+    minutes-long) append job leaves the zombie's rows UNPUBLISHED — its
+    segment is written, the fence refuses the manifest flip, and vacuum
+    sweeps the orphan segment."""
     storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     storage.create_or_append(
         spark.createDataFrame([(1, 2020, "a")], ["k", "year", "v"]), schema
     )
-    _steal_lock_during_stage_write(monkeypatch, storage)
+    _steal_lock_during_segment_write(monkeypatch, storage)
     with pytest.raises(WriterFencedError):
         storage.create_or_append(
             spark.createDataFrame([(2, 2021, "b")], ["k", "year", "v"]), schema
@@ -656,22 +642,30 @@ def test_swap_append_fences_takeover_during_write_job(spark, tmp_path, monkeypat
     monkeypatch.undo()
     rows = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
     assert rows == {(1, 2020, "a")}, "fenced append must publish zero rows"
-    root = storage.path("t")
-    leftovers = [d for d in os.listdir(os.path.dirname(root)) if "__stage_" in d]
-    assert leftovers == [], "fenced append must clean its staging dir"
+    assert storage.generation("t") == 1
+    # the zombie never wrote a generation file a winner's gen 2 could share
+    assert not os.path.exists(storage._history_path("t", 2))
+    shutil.rmtree(storage._lock_dir("t"))  # the simulated winner's lock
+
+    def segs() -> set:
+        return {e for e in os.listdir(storage.path("t")) if e.startswith("seg_")}
+
+    assert len(segs()) == 2
+    storage.vacuum("t")  # the zombie's segment is an orphan
+    assert segs() == set(storage._read_manifest("t")["parts"]["year=2020"])
 
 
 def test_swap_upsert_fences_takeover_during_write_job(spark, tmp_path, monkeypatch):
-    """Same structural close for the partition-overwrite path: a takeover
-    during the merged-slice staging job fences before any live partition
-    dir is touched — old rows keep serving, no half-overwritten table."""
+    """Same for the partition-overwrite path: a takeover during the
+    merged-slice write job fences before the manifest flips — old rows
+    keep serving, no half-overwritten table."""
     storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2020, "a"), (2, 2021, "b")], ["k", "year", "v"]
     )
     assert storage.upsert(spark, base, schema) == 2
-    _steal_lock_during_stage_write(monkeypatch, storage)
+    _steal_lock_during_segment_write(monkeypatch, storage)
     with pytest.raises(WriterFencedError):
         storage.upsert(
             spark, spark.createDataFrame([(1, 2020, "CHANGED")], ["k", "year", "v"]), schema
@@ -684,83 +678,61 @@ def test_swap_upsert_fences_takeover_during_write_job(spark, tmp_path, monkeypat
     assert storage.generation("t") == 1
 
 
-def test_swap_append_preserves_hive_escaping_via_rename(spark, tmp_path):
-    """The staged-file ingest copies Hive dir names verbatim, so appends
-    into percent-escaped partition dirs land in the SAME dir Spark's own
-    append would use (no duplicate a:b vs a%3Ab trees), and generations
-    advance per append."""
-    storage = ParquetStorage(str(tmp_path))
-    schema = _str_part_schema()
-    storage.create_or_append(
-        spark.createDataFrame([(1, "a:b", "x")], ["k", "src", "v"]), schema
-    )
-    storage.create_or_append(
-        spark.createDataFrame([(2, "a:b", "y"), (3, "keep", "z")], ["k", "src", "v"]),
-        schema,
-    )
-    root = storage.path("t")
-    escaped = os.path.join(root, "src=a%3Ab")
-    assert os.path.isdir(escaped)
-    n_files = [f for f in os.listdir(escaped) if f.endswith(".parquet")]
-    assert len(n_files) >= 2, "both appends' files share the one escaped dir"
-    rows = {(r["k"], r["src"]) for r in storage.read(spark, "t").collect()}
-    assert rows == {(1, "a:b"), (2, "a:b"), (3, "keep")}
-    assert storage.generation("t") == 2
-
-
 def test_swap_partition_publish_rolls_back_on_midloop_failure(spark, tmp_path, monkeypatch):
-    """A driver-side failure in the middle of the partition-swap publish
-    loop must unwind completely: new slices return to the stage dir and
-    PARKED old slices are restored before the trash dir is deleted — the
-    live table reads exactly as before, and a retry then succeeds."""
+    """A failure of the publish itself (the ``_current`` replace) during a
+    partition overwrite must leave the table reading exactly as before;
+    the orphan generation file and segment it leaves are never served, a
+    retry then succeeds, and vacuum sweeps every leftover."""
     storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame([(1, 2020, "a"), (2, 2021, "b")], ["k", "year", "v"])
     assert storage.upsert(spark, base, schema) == 2
     before = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
 
-    calls = {"n": 0}
-    real_rename = os.rename
+    real_replace = os.replace
 
     def failing(src, dst):
-        if "__stage_" in src and "year=" in dst:
-            calls["n"] += 1
-            if calls["n"] == 2:  # second partition: parked, placement fails
-                raise OSError("simulated rename failure mid-publish")
-        return real_rename(src, dst)
+        if dst == storage._manifest_path("t"):
+            raise OSError("simulated publish failure")
+        return real_replace(src, dst)
 
-    monkeypatch.setattr(os, "rename", failing)
+    monkeypatch.setattr(os, "replace", failing)
     update = spark.createDataFrame(
         [(1, 2020, "NEW"), (2, 2021, "NEW")], ["k", "year", "v"]
     )
-    with pytest.raises(OSError, match="simulated rename failure"):
+    with pytest.raises(OSError, match="simulated publish failure"):
         storage.upsert(spark, update, schema)
     monkeypatch.undo()
 
     after = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
     assert after == before, "failed publish must leave the table untouched"
-    parent = os.path.dirname(storage.path("t"))
-    leftovers = [d for d in os.listdir(parent) if "__stage_" in d or "__old_" in d]
-    assert leftovers == [], "rollback must leave no stage/trash residue"
-    assert calls["n"] == 2, "the failure must have hit the mid-loop point"
+    assert storage.generation("t") == 1 and storage.history("t") == [1]
     assert storage.upsert(spark, update, schema) == 2  # retry succeeds
     got = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
     assert got == {(1, 2020, "NEW"), (2, 2021, "NEW")}
+    storage.vacuum("t")
+    root = storage.path("t")
+    live = {s for segs in storage._read_manifest("t")["parts"].values() for s in segs}
+    assert {e for e in os.listdir(root) if e.startswith("seg_")} == live
+    assert sorted(e for e in os.listdir(root) if e.startswith("_")) == [
+        "_current", "_gen_00000002.json",
+    ]
 
 
 def test_pointer_read_rejects_uncommitted_table(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     assert not storage.exists("nope")
     with pytest.raises(FileNotFoundError):
         storage.read(spark, "nope")
 
 
 def test_differential_fuzz_swap_vs_pointer(spark, tmp_path):
-    """Differential evidence the two commit protocols implement ONE table
-    semantics: a seeded random program of upserts / appends / deletes /
-    segment compactions / vacuums runs against both modes, and after
-    EVERY op the full row sets must be identical (and match a plain dict
-    model of latest-wins-by-key plus appended rows)."""
+    """Differential evidence the store implements the table semantics: a
+    seeded random program of upserts / deletes / segment compactions /
+    vacuums runs against it, and after EVERY op the full row set must
+    match a plain dict model of latest-wins-by-key. Same seed, op mix and
+    model as when this program also drove the retired rename-publish
+    store side by side."""
     import random
 
     rng = random.Random(1307)
@@ -774,8 +746,7 @@ def test_differential_fuzz_swap_vs_pointer(spark, tmp_path):
         unique_keys=["k"],
         partition_by=["part"],
     )
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    ptr = ParquetStorage(str(tmp_path / "pt"), commit="pointer")
+    ptr = ParquetStorage(str(tmp_path / "pt"))
     model: dict[int, tuple[int, str]] = {}
     snapshots: dict[int, set] = {}  # pointer generation -> expected row set
 
@@ -806,28 +777,23 @@ def test_differential_fuzz_swap_vs_pointer(spark, tmp_path):
             batch: dict[int, tuple[int, str]] = {}
             for k, p, v in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
                 batch.setdefault(k, (p, v))
-            for s in (swap, ptr):
-                s.upsert(spark, df_of(rows), schema)
+            ptr.upsert(spark, df_of(rows), schema)
             model.update(batch)
         elif op == "delete" and model:
             keys = rng.sample(sorted(model), min(len(model), rng.randrange(1, 3)))
             kdf = spark.createDataFrame(
                 [(k, model[k][0]) for k in keys], ["k", "part"]
             )
-            for s in (swap, ptr):
-                s.delete_keys(spark, kdf, schema)
+            ptr.delete_keys(spark, kdf, schema)
             for k in keys:
                 model.pop(k)
         elif op == "compact":
             ptr.compact_segments(spark, schema, max_segments=2)
         elif op == "vacuum":
-            for s in (swap, ptr):
-                s.vacuum("t")
+            ptr.vacuum("t")
         ops.append(op)
         want = {(k, p, v) for k, (p, v) in model.items()}
-        got_swap, got_ptr = state(swap), state(ptr)
-        assert got_swap == want, f"swap diverged from model after {ops}"
-        assert got_ptr == want, f"pointer diverged from model after {ops}"
+        assert state(ptr) == want, f"store diverged from model after {ops}"
         if ptr.exists("t"):
             snapshots[ptr.generation("t")] = want
     assert any(o == "delete" for o in ops) and ops.count("upsert") >= 5
@@ -847,16 +813,18 @@ def test_differential_fuzz_swap_vs_pointer(spark, tmp_path):
 
 
 def test_differential_fuzz_swap_publish_fault_injection(spark, tmp_path, monkeypatch):
-    """Crash-consistency fuzz for the staged swap publish: a seeded random
-    program of upserts / appends / deletes runs with os.rename randomly
-    failing on PUBLISH renames only (staged-file ingest, partition swaps,
-    atomic-swap dance — recovery renames stay reliable, as a filesystem
-    that failed everything forever would). Invariants, checked after every
-    event: (a) any op that raises leaves the swap table EXACTLY as before
-    (the mid-loop rollback + crashed-swap recovery), (b) a bounded retry
-    then succeeds, (c) swap and a fault-free pointer store agree with the
-    dict model throughout."""
+    """Crash-consistency fuzz for the manifest-flip publish: a seeded
+    random program of upserts / appends / deletes runs with failures
+    injected at its two write points — the segment write job (the Spark
+    write raises after a torn partial segment landed) and
+    ``_flip_manifest``'s ``os.replace`` of either manifest file.
+    Invariants, checked after every event: (a) any op that raises leaves
+    the table reading EXACTLY as before, (b) a bounded retry then
+    succeeds, (c) the table agrees with the dict model throughout, and
+    (d) vacuum leaves only what the committed manifest references."""
     import random
+
+    from pyspark.sql.readwriter import DataFrameWriter
 
     fault = random.Random(4113)
     rng = random.Random(2913)
@@ -870,35 +838,46 @@ def test_differential_fuzz_swap_publish_fault_injection(spark, tmp_path, monkeyp
         unique_keys=["k"],
         partition_by=["part"],
     )
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    ptr = ParquetStorage(str(tmp_path / "pt"), commit="pointer")
+    store = ParquetStorage(str(tmp_path / "pt"))
     model: dict[int, tuple[int, str]] = {}
 
-    real_rename = os.rename
+    real_replace = os.replace
+    real_write = DataFrameWriter.parquet
     armed = {"on": False}
+    hits = {"write": 0, "replace": 0}
 
-    def flaky(src, dst):
-        publishy = "__stage_" in src or "__tmp_" in src or "__old_" in dst
-        if armed["on"] and publishy and fault.random() < 0.35:
-            raise OSError("injected publish-rename fault")
-        return real_rename(src, dst)
+    def flaky_write(self, path, *a, **kw):
+        if armed["on"] and os.path.basename(path).startswith("seg_") and fault.random() < 0.3:
+            hits["write"] += 1
+            real_write(self, path, *a, **kw)
+            with open(os.path.join(path, "part-torn.parquet"), "w") as f:
+                f.write("torn")
+            raise OSError("injected segment-write fault")
+        return real_write(self, path, *a, **kw)
 
-    monkeypatch.setattr(os, "rename", flaky)
+    def flaky_replace(src, dst):
+        if armed["on"] and ".tmp_" in src and fault.random() < 0.3:
+            hits["replace"] += 1
+            raise OSError("injected publish fault")
+        return real_replace(src, dst)
 
-    def state(storage) -> set:
-        if not storage.exists("t"):
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky_write)
+    monkeypatch.setattr(os, "replace", flaky_replace)
+
+    def state() -> set:
+        if not store.exists("t"):
             return set()
-        return {(r["k"], r["part"], r["v"]) for r in storage.read(spark, "t").collect()}
+        return {(r["k"], r["part"], r["v"]) for r in store.read(spark, "t").collect()}
 
-    def run_swap_with_faults(op) -> int:
-        """Run op against the swap store under injected faults; after every
-        failure assert full rollback; return the number of injected
+    def run_with_faults(op) -> int:
+        """Run op under injected faults; after every failure assert the
+        table reads exactly as before; return the number of injected
         failures survived."""
         failures = 0
         for attempt in range(8):
             armed["on"] = attempt < 7  # last attempt fault-free: must land
             try:
-                op(swap)
+                op()
                 armed["on"] = False
                 return failures
             except OSError as e:
@@ -906,8 +885,8 @@ def test_differential_fuzz_swap_publish_fault_injection(spark, tmp_path, monkeyp
                 failures += 1
                 armed["on"] = False
                 want = {(k, p, v) for k, (p, v) in model.items()}
-                assert state(swap) == want, (
-                    f"swap not rolled back after injected failure #{failures}"
+                assert state() == want, (
+                    f"table changed by a failed publish (failure #{failures})"
                 )
         raise AssertionError("unreachable")
 
@@ -928,8 +907,7 @@ def test_differential_fuzz_swap_publish_fault_injection(spark, tmp_path, monkeyp
             for k, p, v in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
                 batch.setdefault(k, (p, v))
             df = spark.createDataFrame(rows, ["k", "part", "v"])
-            survived += run_swap_with_faults(lambda s: s.upsert(spark, df, schema))
-            ptr.upsert(spark, df, schema)
+            survived += run_with_faults(lambda: store.upsert(spark, df, schema))
             model.update(batch)
         elif kind == "append":
             rows = [
@@ -938,36 +916,49 @@ def test_differential_fuzz_swap_publish_fault_injection(spark, tmp_path, monkeyp
             ]
             next_append_key += len(rows)
             df = spark.createDataFrame(rows, ["k", "part", "v"])
-            survived += run_swap_with_faults(lambda s: s.create_or_append(df, schema))
-            ptr.create_or_append(df, schema)
+            survived += run_with_faults(lambda: store.create_or_append(df, schema))
             model.update({k: (p, v) for k, p, v in rows})
         elif kind == "delete" and model:
             keys = rng.sample(sorted(model), min(len(model), rng.randrange(1, 3)))
             kdf = spark.createDataFrame([(k, model[k][0]) for k in keys], ["k", "part"])
-            survived += run_swap_with_faults(
-                lambda s: s.delete_keys(spark, kdf, schema)
-            )
-            ptr.delete_keys(spark, kdf, schema)
+            survived += run_with_faults(lambda: store.delete_keys(spark, kdf, schema))
             for k in keys:
                 model.pop(k)
         else:
             continue
         ops.append(kind)
         want = {(k, p, v) for k, (p, v) in model.items()}
-        assert state(swap) == want, f"swap diverged from model after {ops}"
-        assert state(ptr) == want, f"pointer diverged from model after {ops}"
-    assert survived >= 3, (
-        f"fault schedule exercised only {survived} failures — raise the rate"
+        assert state() == want, f"store diverged from model after {ops}"
+    assert survived >= 3 and hits["write"] and hits["replace"], (
+        f"fault schedule exercised too little: {survived} failures, {hits}"
     )
+    store.vacuum("t")
+    root = store.path("t")
+    live = {s for segs in store._read_manifest("t")["parts"].values() for s in segs}
+    assert {e for e in os.listdir(root) if e.startswith("seg_")} == live
+    assert not [e for e in os.listdir(root) if ".tmp_" in e]
+    assert store.history("t") == [store.generation("t")]
+
+
+def _read_jobs(spark, storage, table: str):
+    """(DataFrame, Spark jobs launched while resolving it) for read()."""
+    sc = spark.sparkContext
+    sc.setJobGroup("ut_stamped_read", "storage.read")
+    try:
+        df = storage.read(spark, table)
+        return df, len(sc.statusTracker().getJobIdsForGroup("ut_stamped_read"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_swap_append_schema_evolution_is_deterministic(spark, tmp_path):
-    """Swap-mode appends across a schema change used to read under
-    whichever part file's footer Spark happened to pick (UUID file names
-    make the winner listing-order random). The generation marker now
-    stamps the evolved union schema and read() applies it explicitly:
-    old rows surface the new column as NULL, a NARROWER later append
-    does not shrink the view, and the column set is stable."""
+    """Appends across a schema change must not read under whichever part
+    file's footer Spark happens to pick (UUID file names make the winner
+    listing-order random). Each commit stamps the evolved union schema in
+    the manifest and read() applies it to every segment — so resolving
+    the table runs no footer-inference job, old rows surface the new
+    column as NULL, a NARROWER later append does not shrink the view, and
+    the column set is stable."""
     storage = ParquetStorage(str(tmp_path))
     v1 = TableSchema(
         table_name="t",
@@ -987,12 +978,16 @@ def test_swap_append_schema_evolution_is_deterministic(spark, tmp_path):
     storage.create_or_append(
         spark.createDataFrame([(2, "b", "x")], ["k", "v", "extra"]), v2
     )
-    df = storage.read(spark, "t")
+    df, jobs = _read_jobs(spark, storage, "t")
+    assert jobs == 0, "read() must not infer the schema from segment footers"
     assert df.columns == ["k", "v", "extra"]
     assert {tuple(r) for r in df.collect()} == {(1, "a", None), (2, "b", "x")}
     # a narrower append after the widening must NOT shrink the view
     storage.create_or_append(spark.createDataFrame([(3, "c")], ["k", "v"]), v1)
-    df = storage.read(spark, "t")
+    stamped = [f["name"] for f in storage._read_manifest("t")["schema"]["fields"]]
+    assert stamped == ["k", "v", "extra"], "the stamp keeps the union"
+    df, jobs = _read_jobs(spark, storage, "t")
+    assert jobs == 0
     assert df.columns == ["k", "v", "extra"], "union view survives a narrow append"
     assert {tuple(r) for r in df.collect()} == {
         (1, "a", None), (2, "b", "x"), (3, "c", None),
@@ -1000,9 +995,10 @@ def test_swap_append_schema_evolution_is_deterministic(spark, tmp_path):
 
 
 def test_swap_partitioned_upsert_schema_evolution(spark, tmp_path):
-    """The partition-swap publish path stamps the evolved schema too: after
+    """The partition-replace publish stamps the evolved schema too: after
     a widened upsert touches ONE partition, the untouched partition's old
-    files still read under the union schema (new column NULL)."""
+    segment still reads under the union schema (new column NULL), and a
+    later NARROWER upsert keeps the widened column."""
     storage = ParquetStorage(str(tmp_path))
     v1 = _part_schema()
     storage.upsert(
@@ -1026,11 +1022,18 @@ def test_swap_partitioned_upsert_schema_evolution(spark, tmp_path):
         spark.createDataFrame([(1, 2020, "A2", "x")], ["k", "year", "v", "extra"]),
         v2,
     )
+    df, jobs = _read_jobs(spark, storage, "t")
+    assert jobs == 0, "read() must not infer the schema from segment footers"
+    got = {r["k"]: (r["year"], r["v"], r["extra"]) for r in df.collect()}
+    assert got == {1: (2020, "A2", "x"), 2: (2021, "b", None)}
+    storage.upsert(
+        spark, spark.createDataFrame([(2, 2021, "B2")], ["k", "year", "v"]), v1
+    )
     got = {
         r["k"]: (r["year"], r["v"], r["extra"])
         for r in storage.read(spark, "t").collect()
     }
-    assert got == {1: (2020, "A2", "x"), 2: (2021, "b", None)}
+    assert got == {1: (2020, "A2", "x"), 2: (2021, "B2", None)}
 
 
 def test_pointer_time_travel_and_rollback(spark, tmp_path):
@@ -1039,7 +1042,7 @@ def test_pointer_time_travel_and_rollback(spark, tmp_path):
     read as consistent snapshots (read(as_of=gen)), rollback republishes
     an old generation's pointer map as a NEW generation without copying
     data, and crash orphans above the current generation are refused."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a")], ["k", "v"]), schema)
     storage.upsert(spark, spark.createDataFrame([(2, "b")], ["k", "v"]), schema)
@@ -1065,16 +1068,13 @@ def test_pointer_time_travel_and_rollback(spark, tmp_path):
     storage.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema)
     assert snap() == {(1, "a"), (3, "c")}
 
-    with pytest.raises(ValueError, match="requires commit='pointer'"):
-        ParquetStorage(str(tmp_path / "sw")).rollback("t", to_gen=1)
-
 
 def test_pointer_vacuum_retention_bounds_time_travel(spark, tmp_path):
     """vacuum(retain_generations=K) keeps the last K prior generations
     time-travelable (their manifests AND the segments they reference);
     everything older is pruned and its exclusive segments swept; default
     K=0 collapses to the current snapshot only."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     for step in range(3):
         storage.upsert(
@@ -1105,7 +1105,7 @@ def test_pointer_diff_generations_change_feed(spark, tmp_path):
     snapshots: keyed mode classifies insert / update_post / delete with
     NULL-proof presence markers and null-safe change detection; keyless
     mode pairs changes as delete + insert via exceptAll."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(
         spark,
@@ -1144,42 +1144,28 @@ def test_pointer_diff_generations_change_feed(spark, tmp_path):
         (4, "d", "insert"),
     }
 
-    with pytest.raises(ValueError, match="requires commit='pointer'"):
-        ParquetStorage(str(tmp_path / "sw")).diff_generations(spark, "t", 1, keys=["k"])
-
 
 def test_count_reads_footers_not_data(spark, tmp_path, monkeypatch):
     """upsert/delete return counts; at 100 TB a scan-based count would be
     a full table read per write. _count must resolve from parquet footer
-    metadata of the LIVE files only: exact across both modes (escaped
-    partitions, multi-segment pointer tables with superseded segments
-    still on disk) and proven scan-free by making read() explode."""
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    ptr = ParquetStorage(str(tmp_path / "pt"), commit="pointer")
+    metadata of the LIVE files only: exact for multi-segment tables with
+    superseded segments still on disk, and proven scan-free by making
+    read() explode."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
-    # swap gets an escapable partition value (pointer rejects those by
-    # design); pointer gets a plain one — the point is superseded
-    # segments staying on disk until vacuum must not be counted
-    for s, hot in ((swap, "a:b"), (ptr, "left")):
-        base = spark.createDataFrame(
-            [(1, hot, "x"), (2, hot, "y"), (3, "keep", "z")], ["k", "src", "v"]
-        )
-        assert s.upsert(spark, base, schema) == 3
-        assert s.upsert(
-            spark, spark.createDataFrame([(1, hot, "X2")], ["k", "src", "v"]), schema
-        ) == 3
-        assert s.delete_keys(
-            spark, spark.createDataFrame([(2, hot)], ["k", "src"]), schema
-        ) == 2
+    base = spark.createDataFrame(
+        [(1, "left", "x"), (2, "left", "y"), (3, "keep", "z")], ["k", "src", "v"]
+    )
+    assert storage.upsert(spark, base, schema) == 3
+    assert storage.upsert(
+        spark, spark.createDataFrame([(1, "left", "X2")], ["k", "src", "v"]), schema
+    ) == 3
+    assert storage.delete_keys(
+        spark, spark.createDataFrame([(2, "left")], ["k", "src"]), schema
+    ) == 2
 
     def boom(*a, **kw):
         raise AssertionError("_count must not scan via read()")
 
     monkeypatch.setattr(ParquetStorage, "read", boom)
-    assert swap._count(spark, "t") == 2
-    assert ptr._count(spark, "t") == 2
-
-
-def test_commit_mode_validated():
-    with pytest.raises(ValueError, match="commit"):
-        ParquetStorage("/tmp/x", commit="s3")
+    assert storage._count(spark, "t") == 2
